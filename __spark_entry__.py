@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from datasketches_spark.config import DedupConfig
 from datasketches_spark.functions import text as tx
+from datasketches_spark.session import core_tasks
 
 SEP = "\x1f"
 TOKEN_RE = r"[A-Za-z_][A-Za-z_0-9]*|[0-9]+|[^\sA-Za-z_0-9]"
@@ -48,7 +49,7 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     already carry enough splits (the 100 TB case), so the shuffle is never
     added where it wouldn't pay (guide §2.5 'input skew: one huge
     unsplittable file ... repartition immediately after the read')."""
-    min_parts = 2 * spark.sparkContext.defaultParallelism
+    min_parts = core_tasks(spark.sparkContext)
     if df.rdd.getNumPartitions() < min_parts:
         return df.repartition(min_parts)
     return df
@@ -272,7 +273,7 @@ def _q_minhash_lsh_pairs(spark, sf_dir):
 
     cfg = DedupConfig(jaccard_threshold=0.5)
     d = _read(spark, sf_dir, "documents").select(F.col("doc_id"), F.col("text").alias("content"))
-    sig = build_signatures(d, cfg, min_parallelism=2 * spark.sparkContext.defaultParallelism,
+    sig = build_signatures(d, cfg, min_parallelism=core_tasks(spark.sparkContext),
                            parts=frozenset({"minhash", "kmv"}))
     # materialize the signature stage ONCE: the band table and both verify
     # sides reference this subtree, which would otherwise run the Arrow
@@ -296,7 +297,7 @@ def _q_minhash_pairs_bounded(spark, sf_dir):
 
     cfg = DedupConfig(jaccard_threshold=0.5)
     d = _read(spark, sf_dir, "documents").select(F.col("doc_id"), F.col("text").alias("content"))
-    sig = build_signatures(d, cfg, min_parallelism=2 * spark.sparkContext.defaultParallelism,
+    sig = build_signatures(d, cfg, min_parallelism=core_tasks(spark.sparkContext),
                            parts=frozenset({"minhash", "kmv"}))
     sig = sig.localCheckpoint()
     bands = lsh.band_table(sig, cfg)
@@ -317,7 +318,7 @@ def _q_simhash_fingerprints(spark, sf_dir):
     d = _read(spark, sf_dir, "documents").select("doc_id", F.col("text").alias("content"))
     # parts={"simhash"}: skip the MinHash + KMV kernels (~45% of the
     # stage's Python compute) — this query consumes only the SimHash slice
-    sig = build_signatures(d, CFG, min_parallelism=2 * spark.sparkContext.defaultParallelism,
+    sig = build_signatures(d, CFG, min_parallelism=core_tasks(spark.sparkContext),
                            parts=frozenset({"simhash"}))
     return sig.select("doc_id", "simhash", "n_shingles")
 
@@ -331,7 +332,7 @@ def _q_simhash_near_pairs(spark, sf_dir):
     from datasketches_spark.operators.signatures import build_signatures
 
     d = _read(spark, sf_dir, "documents").select("doc_id", F.col("text").alias("content"))
-    sig = build_signatures(d, CFG, min_parallelism=2 * spark.sparkContext.defaultParallelism,
+    sig = build_signatures(d, CFG, min_parallelism=core_tasks(spark.sparkContext),
                            parts=frozenset({"simhash"}))
     sh = sig.select("doc_id", "simhash")
     bands = lsh.simhash_bands(sh, n_tables=4)
@@ -359,7 +360,7 @@ def _q_lsh_bucket_histogram(spark, sf_dir):
     from datasketches_spark.operators.signatures import build_signatures
 
     d = _read(spark, sf_dir, "documents").select("doc_id", F.col("text").alias("content"))
-    sig = build_signatures(d, CFG, min_parallelism=2 * spark.sparkContext.defaultParallelism,
+    sig = build_signatures(d, CFG, min_parallelism=core_tasks(spark.sparkContext),
                            parts=frozenset({"minhash"}))
     bands = lsh.band_table(sig, CFG)
     return lsh.bucket_histogram(lsh.bucket_stats(bands))
@@ -458,7 +459,7 @@ def _q_span_dup_pairs(spark, sf_dir):
     cfg = DedupConfig(span_pass=True, span_window=20, span_min_tokens=24)
     d = _read(spark, sf_dir, "documents").select("doc_id", F.col("text").alias("content"))
     # parts=(): the span pass consumes only the winnowed span_fps column
-    sig = build_signatures(d, cfg, min_parallelism=2 * spark.sparkContext.defaultParallelism,
+    sig = build_signatures(d, cfg, min_parallelism=core_tasks(spark.sparkContext),
                            parts=frozenset())
     sig = sig.localCheckpoint()  # candidate-gen and span verify share it
     cands, _dropped = spans.span_candidate_pairs(sig, cfg)

@@ -18,8 +18,6 @@ equality/XOR-based or re-views the bits as uint64).
 
 from __future__ import annotations
 
-import os
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -100,17 +98,9 @@ def build_signatures(docs: DataFrame, cfg: DedupConfig,
     schema = signature_schema(parts=parts)
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # DSS_SIG_TIMING=<path>: append one line per task with the pure
-        # python compute seconds (excludes Arrow decode/encode and JVM
-        # time) — the probe hook that separates "workers starved by the
-        # JVM side" from "workers slowed by the host" in scaling analysis
-        timing_path = os.environ.get("DSS_SIG_TIMING")
-        t_compute = 0.0
-        n_docs_task = 0
         params = minhash.perm_params(num_perm, seed) if want_mh else None
         no_fps = np.empty(0, dtype=np.int64)
         for pdf in batches:
-            t0 = time.perf_counter() if timing_path else 0.0
             ids = pdf["doc_id"].to_numpy()
             texts = pdf["content"].tolist()
             token_lists = [shingles.tokenize(t or "") for t in texts]
@@ -138,14 +128,7 @@ def build_signatures(docs: DataFrame, cfg: DedupConfig,
                 cols["kmv_entries"] = [e.view(np.int64) for e in kmv_entries]
                 cols["kmv_theta"] = theta_list
             cols["span_fps"] = fp_list
-            out = pd.DataFrame(cols)
-            if timing_path:
-                t_compute += time.perf_counter() - t0
-                n_docs_task += n
-            yield out
-        if timing_path and n_docs_task:
-            with open(timing_path, "a") as fh:
-                fh.write(f"{os.getpid()} {t_compute:.3f} {n_docs_task}\n")
+            yield pd.DataFrame(cols)
 
     pruned = docs.select(F.col(id_col).alias("doc_id"), F.col(content_col).alias("content"))
     if min_parallelism and pruned.rdd.getNumPartitions() < min_parallelism:

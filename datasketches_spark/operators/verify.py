@@ -130,7 +130,12 @@ def _trimmed_ratio_parts(cfg: DedupConfig):
     k = F.lit(cfg.k)
     theta_eff = F.when(n_u > k, F.element_at(su, cfg.k + 1)).otherwise(min_theta)
     cu = F.when(n_u > k, k).otherwise(n_u).cast("double")
-    ci = F.size(F.filter(F.array_intersect(ka, kb), lambda x: x < theta_eff)).cast("double")
+    # the entries below theta_eff are exactly the k smallest of the sorted
+    # distinct union (slice returns all of su when n_u <= k): a per-row
+    # expression. A lambda comparing against theta_eff would re-evaluate
+    # the sort once per intersection element.
+    ci = F.size(F.array_intersect(F.array_intersect(ka, kb),
+                                  F.slice(su, 1, cfg.k))).cast("double")
     f = theta_eff.cast("double") / F.lit(float(MAX_THETA_LONG))
     both_empty = ((F.size(F.col("kmv_a")) == 0) & (F.size(F.col("kmv_b")) == 0)
                   & (F.col("theta_a") == F.lit(MAX_THETA_LONG))
@@ -139,11 +144,10 @@ def _trimmed_ratio_parts(cfg: DedupConfig):
     return cu, ci, f, corner
 
 
-def _jaccard_bounds_cols(cfg: DedupConfig, num_std_devs: float = 2.0):
+def _jaccard_bounds_cols(cu, ci, f, corner, num_std_devs: float = 2.0):
     """(jaccard_lb, jaccard_ub) columns: ratio bounds of the trimmed
-    |A∩B| over |A∪B| statistic (``_trimmed_ratio_parts``) at inclusion
-    probability f = theta/2^63-1."""
-    cu, ci, f, corner = _trimmed_ratio_parts(cfg)
+    |A∩B| over |A∪B| statistic at inclusion probability f = theta/2^63-1,
+    from the (cu, ci, f, corner) parts of ``_trimmed_ratio_parts``."""
     lb, ub = _ratio_bounds_cols(cu, ci, f, num_std_devs)
     lb = F.when(cu == 0, corner).otherwise(lb)
     ub = F.when(cu == 0, corner).otherwise(ub)
@@ -161,27 +165,18 @@ def _jaccard_cols(cfg: DedupConfig):
     lazily): when the union fits nominal k — the overwhelmingly common
     case at k=4096 — the quickselect trim is the identity and
     J = |A∩B| / (|A| + |B| - |A∩B|), needing ONE array_intersect per
-    evaluation (cheaper than even the untrimmed array_union form). The
-    array_sort pull-back branch runs only on rows whose union exceeds k.
-    Measured: the unconditional sorted-union form cost ~9 s on the 40k-file
-    bench's verify chain; this form costs the same as the old untrimmed
-    estimator while computing the exact trimmed statistic."""
-    min_theta = F.least(F.col("theta_a"), F.col("theta_b"))
-    ka = F.filter(F.col("kmv_a"), lambda x: x < min_theta)
-    kb = F.filter(F.col("kmv_b"), lambda x: x < min_theta)
-    inter = F.size(F.array_intersect(ka, kb))
-    n_u = F.size(ka) + F.size(kb) - inter
-    cu, ci, _, corner = _trimmed_ratio_parts(cfg)
-    kmv_j = (
-        F.when(n_u == 0, corner)  # cu == 0 ⇔ n_u == 0 below k: same corner
-        .when(n_u <= F.lit(cfg.k), inter.cast("double") / n_u.cast("double"))
-        .otherwise(F.when(cu > 0, ci / cu).otherwise(corner))
-    )
+    evaluation. Measured: the unconditional sorted-union form cost ~9 s
+    on the 40k-file bench's verify chain. Only rows whose union exceeds k
+    take the pull-back branch, which sorts the union once per row (never
+    once per element). Measured at k=4096 (local[4], 4 vCPU): 4 over-k
+    pairs took 49 s when the pull-back compared each intersection element
+    against the sorted union's (k+1)-th entry inside a lambda (one sort per
+    element), and 0.8 s with the k-smallest slice."""
     mh_agree = F.size(
         F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda b: b)
     )
     mh_j = mh_agree.cast("double") / F.lit(float(cfg.num_perm))
-    return kmv_j, mh_j
+    return _kmv_jaccard_col(cfg), mh_j
 
 
 def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
@@ -256,10 +251,16 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
         kmv_j.alias("jaccard_kmv"),
         mh_j.alias("jaccard_minhash"),
     ]
+    out = pairs.join(a, left_col).join(b, right_col)
     if with_bounds:
-        lb, ub = _jaccard_bounds_cols(cfg, num_std_devs)
+        # the bounds math references each part dozens of times: inlined,
+        # the expression tree grows to megabytes (measured: ~20 s of
+        # planning and codegen for one pair), so project the parts once
+        parts = ("_cu", "_ci", "_f", "_corner")
+        out = out.select("*", *(c.alias(n) for c, n in zip(_trimmed_ratio_parts(cfg), parts)))
+        lb, ub = _jaccard_bounds_cols(*(F.col(n) for n in parts), num_std_devs)
         cols += [lb.alias("jaccard_lb"), ub.alias("jaccard_ub")]
-    out = pairs.join(a, left_col).join(b, right_col).select(*cols)
+    out = out.select(*cols)
     if not keep_below_threshold:
         out = out.filter(F.col("jaccard_kmv") >= F.lit(cfg.jaccard_threshold))
     return out
@@ -328,9 +329,9 @@ def _verify_pairs_two_tier(pairs: DataFrame, s: DataFrame, cfg: DedupConfig,
 
 
 def _kmv_jaccard_col(cfg: DedupConfig):
-    """The jaccard_kmv column alone (same trimmed statistic as
-    ``_jaccard_cols``, without the MinHash leg — for the two-tier path
-    where jaccard_minhash was already computed from the narrow join)."""
+    """The jaccard_kmv column alone (the trimmed statistic documented on
+    ``_jaccard_cols``, without the MinHash leg — also used by the two-tier
+    path, where jaccard_minhash was already computed from the narrow join)."""
     min_theta = F.least(F.col("theta_a"), F.col("theta_b"))
     ka = F.filter(F.col("kmv_a"), lambda x: x < min_theta)
     kb = F.filter(F.col("kmv_b"), lambda x: x < min_theta)
@@ -338,7 +339,7 @@ def _kmv_jaccard_col(cfg: DedupConfig):
     n_u = F.size(ka) + F.size(kb) - inter
     cu, ci, _, corner = _trimmed_ratio_parts(cfg)
     return (
-        F.when(n_u == 0, corner)
+        F.when(n_u == 0, corner)  # cu == 0 ⇔ n_u == 0 below k: same corner
         .when(n_u <= F.lit(cfg.k), inter.cast("double") / n_u.cast("double"))
         .otherwise(F.when(cu > 0, ci / cu).otherwise(corner))
     )

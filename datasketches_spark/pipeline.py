@@ -23,6 +23,7 @@ pathological corpus of a billion copies of one file costs one signature.
 from __future__ import annotations
 
 import threading
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +34,7 @@ from datasketches_spark.operators import exact_dedup, lsh, spans, verify
 from datasketches_spark.operators.connected_components import connected_components
 from datasketches_spark.operators.signatures import build_signatures
 from datasketches_spark.plans.checkpoints import CheckpointStore, input_fingerprint
+from datasketches_spark.session import core_tasks
 
 
 @dataclass
@@ -63,40 +65,51 @@ def run_dedup(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     if not light_stages:
         return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col,
                                collect_metrics, light_stages)
-    # SESSION-CONF WINDOW INVARIANT (re-entrant): light mode mutates
-    # session-level conf (adaptive.enabled off + the two data-derived
-    # shuffle.partitions resizes inside _run_dedup_impl). Two concurrent
-    # light runs on one session would otherwise save each other's
-    # transient values as "prev" and restore garbage — the first run in
-    # wins the snapshot, the LAST run out restores it (depth-counted).
-    # Mid-run resizes remain benign cross-talk between concurrent runs
-    # (both performance-only and bounded by the session cap), never a
-    # correctness issue; pinned by test_round6.test_concurrent_light_runs.
-    with _LIGHT_CONF_LOCK:
-        if _LIGHT_CONF_STATE["depth"] == 0:
-            _LIGHT_CONF_STATE["prev"] = (
-                spark.conf.get("spark.sql.adaptive.enabled", "true"),
-                spark.conf.get("spark.sql.shuffle.partitions"),
-            )
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _LIGHT_CONF_STATE["depth"] += 1
-    try:
-        # every pipeline-internal action (stage writes, caches, CC rounds)
-        # runs inside this window; the returned heavy tables are parquet
-        # read-backs whose later consumption doesn't care about AQE
+    # every pipeline-internal action (stage writes, caches, CC rounds)
+    # runs inside this window; the returned heavy tables are parquet
+    # read-backs whose later consumption doesn't care about AQE
+    with _light_conf_window(spark):
         return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col,
                                collect_metrics, light_stages)
+
+
+@contextmanager
+def _light_conf_window(spark: SparkSession):
+    """SESSION-CONF WINDOW INVARIANT (re-entrant, per SparkSession): light
+    mode mutates session-level conf (adaptive.enabled off + the two
+    data-derived shuffle.partitions resizes inside _run_dedup_impl). Two
+    concurrent light runs on one session would otherwise save each other's
+    transient values as "prev" and restore garbage — the first run in wins
+    the snapshot, the LAST run out restores it (depth-counted). Conf is
+    session-scoped (``spark.newSession()`` has its own), so each session
+    keeps its own depth and snapshot. Mid-run resizes remain benign
+    cross-talk between concurrent runs on one session (performance-only
+    and bounded by the session cap), never a correctness problem; pinned by
+    test_round6.test_concurrent_light_runs_restore_confs."""
+    with _LIGHT_CONF_LOCK:
+        state = _LIGHT_CONF_STATE.get(spark)
+        if state is None:
+            state = _LIGHT_CONF_STATE[spark] = {
+                "depth": 0,
+                "prev": (spark.conf.get("spark.sql.adaptive.enabled", "true"),
+                         spark.conf.get("spark.sql.shuffle.partitions")),
+            }
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        state["depth"] += 1
+    try:
+        yield
     finally:
         with _LIGHT_CONF_LOCK:
-            _LIGHT_CONF_STATE["depth"] -= 1
-            if _LIGHT_CONF_STATE["depth"] == 0:
-                prev, prev_sp = _LIGHT_CONF_STATE["prev"]
+            state["depth"] -= 1
+            if state["depth"] == 0:
+                del _LIGHT_CONF_STATE[spark]
+                prev, prev_sp = state["prev"]
                 spark.conf.set("spark.sql.adaptive.enabled", prev)
                 spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 _LIGHT_CONF_LOCK = threading.Lock()
-_LIGHT_CONF_STATE: dict = {"depth": 0, "prev": None}
+_LIGHT_CONF_STATE: dict = {}  # SparkSession -> {"depth", "prev"}
 
 
 def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
@@ -176,43 +189,37 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         prewarm = _warm_pool.submit(_warm_exact)
         _warm_pool.shutdown(wait=False)
 
-    n_cores = spark.sparkContext.defaultParallelism
-    # 2x cores: a pandas stage task occupies a JVM thread AND a python
-    # worker, neither saturating a core alone — finer tasks pack the
-    # pair onto cores better and smooth stragglers (measured: 64 parts
-    # beat 32 by ~1.7x on 32 cores for signatures+write)
+    n_tasks = core_tasks(spark.sparkContext)
     reps = store.stage(
         "distinct_reps",
         lambda: exact_dedup.distinct_content_docs(exact_dedup.with_sha256(base)).select(
             "doc_id", "content"
         ),
         upstream=["docs_meta"],
-        # feeds the compute-heavy signature stage: sized to the DATA with a
-        # floor well above 2x any probe-leg core count, so the same
-        # checkpoint gives every consumer parallelism fine-grained tasks
-        # (a handful of straggler tasks at tiny task counts idles a wave)
-        min_partitions=max(64, 2 * n_cores),
+        # feeds the compute-heavy signature stage, whose task count is this
+        # stage's partition count (mapInPandas preserves partitioning):
+        # at least core_tasks, so the same checkpoint gives every consumer
+        # core a pandas task without paying per-task cost for idle extras
+        min_partitions=n_tasks,
         # light mode: the full content column is never written at all —
         # the signature write job reads the corpus directly (uncached:
         # content is the one column too big to pin)
         light=True,
     )
 
-    # no min_partitions here: the input checkpoint already carries n_cores
-    # files, and mapInPandas preserves partitioning — a repartition would
-    # shuffle the wide signature arrays for nothing
+    # no min_partitions here: the input stage already carries >= n_tasks
+    # partitions, and mapInPandas preserves partitioning — a repartition
+    # would shuffle the wide signature arrays for nothing
     if light_stages and checkpoint_dir:
         # in light mode the signature stage computes straight off the lazy
-        # distinct-content plan, so its task count IS the distinct
-        # shuffle's partition count. The session default (2x cores, e.g.
-        # 16 at local[8]) gives the pipeline's one compute-heavy stage
-        # tasks of ~60+ core-seconds at probe scale — lumpy waves and
-        # straggler idle. Match the checkpointed path's file-count floor
-        # (>= 64) for exactly this stage; the partition sizing AFTER the
-        # signature write shrinks it back down for the narrow tables.
+        # distinct-content plan (distinct_reps' min_partitions does not
+        # apply), so its task count IS the distinct shuffle's partition
+        # count: floor it at core_tasks for exactly this stage; the
+        # partition sizing AFTER the signature write shrinks it back down
+        # for the narrow tables.
         prev_sig_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
         spark.conf.set("spark.sql.shuffle.partitions",
-                       str(max(64, prev_sig_sp)))
+                       str(max(n_tasks, prev_sig_sp)))
     sig = store.stage(
         "signatures",
         lambda: build_signatures(reps, cfg),

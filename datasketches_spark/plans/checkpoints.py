@@ -317,8 +317,6 @@ class CheckpointStore:
         entry = {"stage": name, "resumed": False, "n_rows": n_rows,
                  "wall_sec": round(time.time() - t0, 2)}
         self.lineage.append(entry)
-        if os.environ.get("DEDUP_PROFILE"):
-            print(f"[stage {name}] {entry['wall_sec']}s rows={n_rows}", flush=True)
         # read back with the KNOWN schema (we just wrote it): skips the
         # footer-read schema-inference job — a fixed ~0.1-0.3 s tax per
         # stage that is pure overhead at any scale

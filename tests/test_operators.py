@@ -187,3 +187,58 @@ def test_salted_join_equals_exact_pairs(spark, sig):
     salted = {(r["id_a"], r["id_b"]) for r in lsh.candidate_pairs_salted(bands, CFG, n_salts=4).collect()}
     assert exact == salted
     assert len(exact) > 0
+
+
+def _lambda_nested(expr, names) -> list[str]:
+    """Class names from ``names`` found anywhere inside the body of a
+    LambdaFunction in the (JVM) expression tree ``expr``."""
+    found = []
+
+    def walk(e, in_lambda):
+        cls = e.getClass().getSimpleName()
+        if in_lambda and cls in names:
+            found.append(cls)
+        inside = in_lambda or cls == "LambdaFunction"
+        ch = e.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i), inside)
+
+    walk(expr, False)
+    return found
+
+
+def test_verify_over_k_parity_at_production_k(spark):
+    """Two documents of ~5k distinct 5-gram shingles with J ~ 0.8 at
+    k=4096: the union below min-theta exceeds k, so verify takes the
+    quickselect pull-back branch. jaccard_kmv/lb/ub equal kmv.jaccard, and
+    the pull-back's sort is evaluated per row: no array_sort/array_union
+    sits inside a lambda of the jaccard_kmv expression (one sort per
+    intersection element made a single over-k pair cost ~12 s)."""
+    from datasketches_spark.operators.verify import verify_pairs
+
+    cfg = DedupConfig(jaccard_threshold=0.5)
+    assert cfg.k == 4096
+    common = [f"c{i}" for i in range(4448)]
+    texts = [" ".join(common + [f"{tag}{i}" for i in range(556)]) for tag in ("a", "b")]
+    sig = build_signatures(
+        spark.createDataFrame(list(enumerate(texts)), "doc_id LONG, content STRING"),
+        cfg).localCheckpoint()
+    pairs = spark.createDataFrame([(0, 1)], "id_a LONG, id_b LONG")
+    out = verify_pairs(pairs, sig, cfg, keep_below_threshold=True, with_bounds=True)
+
+    sk = {r["doc_id"]: kmv.ThetaSketch(
+        r["kmv_theta"], np.asarray(r["kmv_entries"], dtype=np.int64).view(np.uint64),
+        empty=False, seed=cfg.seed) for r in sig.collect()}
+    theta = min(sk[0].theta, sk[1].theta)
+    below = np.union1d(sk[0].entries, sk[1].entries)
+    assert np.count_nonzero(below < np.uint64(theta)) > cfg.k  # over-k branch
+    lb, est, ub = kmv.jaccard(sk[0], sk[1], k=cfg.k)
+    assert 0.7 < est < 0.9
+    (row,) = out.collect()
+    assert (row["jaccard_kmv"], row["jaccard_lb"], row["jaccard_ub"]) == (est, lb, ub)
+
+    plan = out._jdf.queryExecution().analyzed()
+    proj = plan.projectList()
+    (kmv_expr,) = [proj.apply(i) for i in range(proj.size())
+                   if proj.apply(i).name() == "jaccard_kmv"]
+    assert _lambda_nested(kmv_expr, {"ArraySort", "ArrayUnion"}) == []

@@ -122,3 +122,49 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path_factory):
     assert len(resumed) >= 5, m["lineage"]
     pairs2 = sorted((r["id_a"], r["id_b"]) for r in r2.dup_pairs.collect())
     assert pairs1 == pairs2
+
+
+def test_core_tasks_is_twice_default_parallelism():
+    """The signature-stage task count follows the cores: 8 at local[4],
+    and 64 at 32 cores (the old fixed floor, so 32-core plans are
+    unchanged)."""
+    from unittest import mock
+
+    from pyspark import SparkContext
+
+    from datasketches_spark.session import core_tasks
+
+    for cores, tasks in ((4, 8), (32, 64)):
+        sc = mock.Mock(spec=SparkContext)
+        sc.defaultParallelism = cores
+        assert core_tasks(sc) == tasks
+
+
+def test_light_conf_window_is_per_session(spark):
+    """Two sessions' light-mode windows each switch AQE off and each
+    restore their own session's confs, whatever the exit order; a nested
+    window on one session restores only at the outermost exit."""
+    from datasketches_spark.pipeline import _LIGHT_CONF_STATE, _light_conf_window
+
+    # fresh sessions: a failure midway leaves no conf change on ``spark``
+    s1, s2 = spark.newSession(), spark.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "7")
+    prev = {s: (s.conf.get("spark.sql.adaptive.enabled"),
+                s.conf.get("spark.sql.shuffle.partitions")) for s in (s1, s2)}
+    w1, w2 = _light_conf_window(s1), _light_conf_window(s2)
+    w1.__enter__()
+    w2.__enter__()
+    for s in (s1, s2):
+        assert s.conf.get("spark.sql.adaptive.enabled") == "false"
+        s.conf.set("spark.sql.shuffle.partitions", "3")  # a mid-run resize
+    with _light_conf_window(s1):
+        s1.conf.set("spark.sql.shuffle.partitions", "5")
+    assert s1.conf.get("spark.sql.adaptive.enabled") == "false"
+    w1.__exit__(None, None, None)
+    assert (s1.conf.get("spark.sql.adaptive.enabled"),
+            s1.conf.get("spark.sql.shuffle.partitions")) == prev[s1]
+    assert s2.conf.get("spark.sql.adaptive.enabled") == "false"
+    w2.__exit__(None, None, None)
+    assert (s2.conf.get("spark.sql.adaptive.enabled"),
+            s2.conf.get("spark.sql.shuffle.partitions")) == prev[s2]
+    assert _LIGHT_CONF_STATE == {}
