@@ -57,8 +57,6 @@ class DedupConfig:
     rows: int = 8
     jaccard_threshold: float = 0.8
     bucket_cap: int = 256  # LSH buckets larger than this are sub-sampled + logged
-    salt_partitions: int = 0  # 0 = auto from bucket histogram
-    shuffle_partitions: int = 32
     # common-span pass (winnowing fingerprints → shared-block pairs):
     # detects blocks copied between otherwise-dissimilar documents, which
     # whole-document Jaccard correctly scores far below threshold. Any

@@ -27,6 +27,11 @@ from pyspark.sql import functions as F
 
 from datasketches_spark.config import MAX_THETA_LONG, DedupConfig
 
+# memory gates shared with the pipeline: the eligible-bucket broadcast
+# budget (~48 B/row) and the participant count verify broadcasts ids for
+BROADCAST_BUDGET_BYTES = 256 * 1024 * 1024
+PARTICIPANT_BROADCAST_MAX = 4_000_000
+
 # ---- Jaccard confidence bounds as pure Spark column math --------------
 # The reference's marquee B-over-A bounds machinery
 # (/root/reference/ThetaCommon/BoundsOnRatiosInThetaSketchedSets.cs:45-103
@@ -183,7 +188,7 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
                  left_col: str = "id_a", right_col: str = "id_b",
                  keep_below_threshold: bool = False,
                  participants_hint: int | None = None,
-                 participant_broadcast_max: int = 4_000_000,
+                 participant_broadcast_max: int = PARTICIPANT_BROADCAST_MAX,
                  with_bounds: bool = False,
                  num_std_devs: float = 2.0,
                  participants_df: DataFrame | None = None) -> DataFrame:
@@ -373,8 +378,10 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     and FAIL the job instead of recomputing, which on a preemptible
     1000-executor cluster is a reliability bug. ``localCheckpoint`` remains
     the store-less (interactive query) path."""
+    stored = store is not None and getattr(store, "enabled", False)
+
     def _materialize(name: str, compute, upstream: list[str]):
-        if store is not None and getattr(store, "enabled", False):
+        if stored:
             return store.stage(name, compute, upstream=upstream)
         # eager=False: materialization rides the FIRST consuming action
         # instead of costing a dedicated job per sub-stage (the consumers
@@ -386,7 +393,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
         """Row count of a materialized table: free off the write-job
         Observation in the store path; one cheap count over the already-
         materialized (tiny) localCheckpoint otherwise."""
-        if store is not None and getattr(store, "enabled", False):
+        if stored:
             n = (store.manifest(name) or {}).get("n_rows")
             if n is not None:
                 return int(n)
@@ -429,8 +436,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # counted eligible buckets), saving the count action here
     n_memb = n_memb_hint if n_memb_hint is not None else _n_rows(
         "bucket_membership", memb)
-    memb_ups = ups + (["bucket_membership"] if store is not None
-                      and getattr(store, "enabled", False) else [])
+    memb_ups = ups + (["bucket_membership"] if stored else [])
     # star edges stay LAZY off the materialized membership: consumed
     # exactly once (the verify probe side) now that the participant-id
     # broadcast derives from memb instead of from the pair plan
@@ -452,8 +458,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # the participant count. At web scale n_memb exceeds the gate and this
     # stays off — the plain shuffle joins run as before.
     sig_v = sig
-    participant_max = 4_000_000
-    if n_memb is not None and n_memb <= participant_max:
+    if n_memb is not None and n_memb <= PARTICIPANT_BROADCAST_MAX:
         sig_v = _materialize(
             "participant_sigs",
             lambda: sig.select("doc_id", "minhash", "kmv_entries", "kmv_theta")
@@ -461,8 +466,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
                   "doc_id", "left_semi"),
             upstream=memb_ups,
         )
-        sig_v_ups = memb_ups + (["participant_sigs"] if store is not None
-                                and getattr(store, "enabled", False) else [])
+        sig_v_ups = memb_ups + (["participant_sigs"] if stored else [])
     else:
         sig_v_ups = memb_ups
     # materialize the verified star edges once: passed/failed/fb_pairs all
@@ -491,8 +495,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
             .select("band", "bhash")
             .distinct()
         ),
-        upstream=memb_ups + (["star_verified"] if store is not None
-                             and getattr(store, "enabled", False) else []),
+        upstream=memb_ups + (["star_verified"] if stored else []),
     )
     # broadcast bad_buckets into the bands re-scan ONLY when its measured
     # row count fits (store path: free via the write-job Observation;
@@ -501,7 +504,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # set huge — an unguarded broadcast there is a driver OOM. ~24 B/row.
     bad_local = None
     local_cap = int(os.environ.get("DSS_FB_MATERIALIZE_BAD", "20000"))
-    if store is not None and getattr(store, "enabled", False):
+    if stored:
         n_bad = (store.manifest("bad_buckets") or {}).get("n_rows")
     else:
         # one job instead of two: the same action that would have counted
@@ -580,12 +583,10 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # self-join is worth running once, so the plan is materialized when
     # n_bad crosses the adversarial-regime threshold — as a resumable
     # sub-stage in the store path.
-    if n_bad is not None and n_bad > int(os.environ.get("DSS_FB_MATERIALIZE_BAD", "20000")):
+    if n_bad is not None and n_bad > local_cap:
         fb_pairs = _materialize(
             "fallback_pairs", lambda: fb_pairs,
-            upstream=memb_ups + (["star_verified", "bad_buckets"]
-                                 if store is not None and getattr(store, "enabled", False)
-                                 else []),
+            upstream=memb_ups + (["star_verified", "bad_buckets"] if stored else []),
         )
     # the fallback participant set is bounded by bad-bucket membership —
     # at most n_bad × bucket_cap doc ids, and never more than the eligible

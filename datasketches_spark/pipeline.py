@@ -76,8 +76,8 @@ def run_dedup(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
 @contextmanager
 def _light_conf_window(spark: SparkSession):
     """SESSION-CONF WINDOW INVARIANT (re-entrant, per SparkSession): light
-    mode mutates session-level conf (adaptive.enabled off + the two
-    data-derived shuffle.partitions resizes inside _run_dedup_impl). Two
+    mode mutates session-level conf (adaptive.enabled off + the three
+    shuffle.partitions resizes inside _run_dedup_impl). Two
     concurrent light runs on one session would otherwise save each other's
     transient values as "prev" and restore garbage — the first run in wins
     the snapshot, the LAST run out restores it (depth-counted). Conf is
@@ -190,6 +190,13 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         _warm_pool.shutdown(wait=False)
 
     n_tasks = core_tasks(spark.sparkContext)
+    if light_stages:
+        # light mode computes signatures straight off the distinct-content
+        # shuffle (static planning: no coalescing), so the signature task
+        # count IS that shuffle's partition count: exactly core_tasks here;
+        # the session value returns as the cap of the sizing below.
+        session_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_tasks))
     reps = store.stage(
         "distinct_reps",
         lambda: exact_dedup.distinct_content_docs(exact_dedup.with_sha256(base)).select(
@@ -210,23 +217,11 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # no min_partitions here: the input stage already carries >= n_tasks
     # partitions, and mapInPandas preserves partitioning — a repartition
     # would shuffle the wide signature arrays for nothing
-    if light_stages and checkpoint_dir:
-        # in light mode the signature stage computes straight off the lazy
-        # distinct-content plan (distinct_reps' min_partitions does not
-        # apply), so its task count IS the distinct shuffle's partition
-        # count: floor it at core_tasks for exactly this stage; the
-        # partition sizing AFTER the signature write shrinks it back down
-        # for the narrow tables.
-        prev_sig_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(max(n_tasks, prev_sig_sp)))
     sig = store.stage(
         "signatures",
         lambda: build_signatures(reps, cfg),
         upstream=["distinct_reps"],
     )
-    if light_stages and checkpoint_dir:
-        spark.conf.set("spark.sql.shuffle.partitions", str(prev_sig_sp))
     n_sig_rows = None
     if persist:
         # eager materialization: downstream plans reference this cache from
@@ -240,18 +235,18 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     elif checkpoint_dir:
         n_sig_rows = (store.manifest("signatures") or {}).get("n_rows")
 
-    if light_stages and n_sig_rows:
+    p_small = p_post = None
+    if light_stages:
         # static planning (AQE off) means no runtime partition coalescing,
         # so post-signature shuffles — all over NARROW tables 2-4 orders of
         # magnitude smaller than the corpus — would each run
         # shuffle.partitions tiny tasks (the CC stage alone ran 1100+ tasks
         # on a 7k-edge graph). Size them from the OBSERVED signature row
         # count instead (free off the write-job manifest / the persist
-        # count): ~5k signature rows per partition, floored at 16 for
-        # parallelism, capped at the session setting. Restored by the
+        # count): ~5k signature rows per partition, floored at core_tasks
+        # for parallelism, capped at the session setting. Restored by the
         # run_dedup wrapper.
-        cur_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        p_small = max(16, min(cur_sp, n_sig_rows // 5000 + 1))
+        p_small = max(n_tasks, min(session_sp, n_sig_rows // 5000 + 1))
         spark.conf.set("spark.sql.shuffle.partitions", str(p_small))
 
     # the band table is consumed by FIVE subtrees (bucket stats, star-edge
@@ -315,7 +310,7 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # count, saving the verify stage its own count action. Skipped on
         # resume: a valid verified_edges never needs the caches at all.
         worst = n_sig_rows * cfg.bands if n_sig_rows else None
-        if worst is not None and worst * 48 < 256 * 1024 * 1024:
+        if worst is not None and worst * 48 < verify.BROADCAST_BUDGET_BYTES:
             n_eligible = worst
             # the same bound covers bucket MEMBERSHIP rows (every doc sits
             # in <= bands buckets, so members-of-eligible-buckets <= band
@@ -325,7 +320,7 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
             # an overestimate in between would wrongly DISABLE the wide-row
             # semi-filter broadcast a real count would enable; there the
             # verify chain's own count is the right call (and amortized).
-            if worst <= 4_000_000:
+            if worst <= verify.PARTICIPANT_BROADCAST_MAX:
                 n_memb_hint = worst
         else:
             spark.sparkContext.setJobDescription("hint:n_eligible")
@@ -339,7 +334,8 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     else:
         bucket_obs = (store.manifest("bucket_stats") or {}).get("observed", {})
         n_eligible = bucket_obs.get("n_eligible_buckets")
-    bcast_eligible = n_eligible is not None and n_eligible * 48 < 256 * 1024 * 1024
+    bcast_eligible = (n_eligible is not None
+                      and n_eligible * 48 < verify.BROADCAST_BUDGET_BYTES)
 
     if light_stages and n_memb_hint is not None:
         # second static resize, at the LSH boundary: every shuffle from
@@ -357,9 +353,11 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # granularity stays DATA-derived (identical across probe legs,
         # grows back to the session cap as membership grows — a no-op at
         # web scale).
-        cur_sp2 = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        p_post = max(16, min(cur_sp2, n_memb_hint // 50000 + 1))
+        p_post = max(n_tasks, min(p_small, n_memb_hint // 50000 + 1))
         spark.conf.set("spark.sql.shuffle.partitions", str(p_post))
+    # data-derived sizing and broadcast choices (None: not made in this mode)
+    decisions = dict(sig_tasks=n_tasks if light_stages else None, p_small=p_small,
+                     p_post=p_post, bcast_eligible=bcast_eligible, n_memb_hint=n_memb_hint)
 
     _, dropped = lsh.candidate_edges(bands, cfg, stats)
     verified = store.stage(
@@ -398,8 +396,8 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # write jobs to overlap.
     # ORDERING INVARIANT — no session-conf mutation may follow this point
     # in the run: the concurrent dup_pairs write below plans against the
-    # session conf at submission time, and both static resizes (the
-    # signature floor and the membership-derived p_post above) happened
+    # session conf at submission time, and every static resize (the
+    # signature stage's core_tasks, p_small and p_post above) happened
     # strictly earlier. A future edit that moves a spark.conf.set below
     # this submission races the background write's planning. (The light-
     # mode restore in run_dedup's finally runs only after _finish_dedup —
@@ -420,19 +418,20 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         try:
             return _finish_dedup(spark, store, cfg, checkpoint_dir, persist,
                                  collect_metrics, light_stages, hashed, reps,
-                                 sig, exact_edges, verified, dup_fut, dropped)
+                                 sig, exact_edges, verified, dup_fut, dropped,
+                                 decisions)
         except BaseException:
             from concurrent.futures import wait as _fwait
             _fwait([dup_fut])
             raise
     return _finish_dedup(spark, store, cfg, checkpoint_dir, persist,
                          collect_metrics, light_stages, hashed, reps, sig,
-                         exact_edges, verified, None, dropped)
+                         exact_edges, verified, None, dropped, decisions)
 
 
 def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
                   light_stages, hashed, reps, sig, exact_edges, verified,
-                  dup_fut, dropped) -> DedupResult:
+                  dup_fut, dropped, decisions) -> DedupResult:
     """Clustering, span pass, pair assembly and metrics — the tail of
     ``_run_dedup_impl``, split out so the concurrent dup_pairs write can be
     awaited on the error path without a try block spanning 100 lines."""
@@ -508,7 +507,7 @@ def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
             + (["span_pairs"] if cfg.span_pass else []),
         )
 
-    metrics = {"lsh_threshold": cfg.lsh_threshold}
+    metrics = {"lsh_threshold": cfg.lsh_threshold, "decisions": decisions}
     if checkpoint_dir:
         # stage-level row counts come from the manifests (recorded via
         # Observation on each write job) — zero additional Spark jobs

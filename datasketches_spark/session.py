@@ -51,15 +51,15 @@ def get_spark(app: str = "datasketches_spark", cores: int | None = None,
         # probe (measured 2.3x on lang_id alone; scale-independent — a
         # hash probe never loses to a 10-long equality chain)
         .config("spark.sql.optimizer.inSetConversionThreshold", "9")
-        # Checkpoint stages deliberately write ~2x-cores files so the next
-        # (usually Arrow/python) stage gets enough tasks to pipeline JVM
-        # and python-worker halves across waves. The default openCost (4MB)
-        # lets the file scan PACK several such files into one 128MB
-        # partition, silently resurrecting the undersubscription (measured:
-        # a 16-file signature input read back as 8 partitions -> half the
-        # cores idle at local[16], flat scaling beyond 8). 64MB openCost
-        # means "never pack multi-MB files"; scans of real >=128MB files
-        # (the 100 TB case) are unaffected since they split by size anyway.
+        # Checkpoint stages deliberately write >= one file per core so the
+        # next (usually Arrow/python) stage gets a task per core. The
+        # default openCost (4MB) lets the file scan PACK several such files
+        # into one 128MB partition, silently resurrecting the
+        # undersubscription (measured: a 16-file signature input read back
+        # as 8 partitions -> half the cores idle at local[16], flat scaling
+        # beyond 8). 64MB openCost means "never pack multi-MB files"; scans
+        # of real >=128MB files (the 100 TB case) are unaffected since they
+        # split by size anyway.
         .config("spark.sql.files.openCostInBytes", str(64 * 1024 * 1024))
         # default 64MB task-memory pages mean every shuffle task first-touches
         # a fresh 64MB heap region; this environment's page-fault latency makes
@@ -138,14 +138,14 @@ def get_spark(app: str = "datasketches_spark", cores: int | None = None,
 
 
 def core_tasks(sc) -> int:
-    """Task count for a compute-heavy (Arrow/pandas) stage: 2x the
-    context's default parallelism. A pandas-stage task occupies a JVM
-    thread and a python worker, neither saturating a core alone, so 2x
-    cores packs the pair onto cores. Every task beyond that pays only the
-    fixed per-task Arrow/worker cost (measured at local[4] on the 4k-doc
-    bench corpus: the signature stage took 1.22 s with 4 tasks, 2.37 s
-    with 16 and 5.69 s with 64)."""
-    return 2 * sc.defaultParallelism
+    """Task count for a compute-heavy (Python UDF) stage: one per core.
+    Every Python task pays ~0.2 s of worker CPU before its UDF runs
+    (PySpark's ``setup_spark_files`` calls ``importlib.invalidate_caches()``
+    per task, re-reading the ``pyspark.zip`` directory once per cached
+    zipimporter; a JVM task costs ~2 ms). Measured at local[4], 4 vCPU:
+    64 trivial Python tasks took 3.3-3.9 s (JVM: 0.15 s), and the planted
+    benchmark's signature job 2.80 s at 16 tasks, 1.46 s at 4."""
+    return sc.defaultParallelism
 
 
 def parse_extra_conf(spec: str) -> dict[str, str]:

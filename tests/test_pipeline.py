@@ -124,20 +124,19 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path_factory):
     assert pairs1 == pairs2
 
 
-def test_core_tasks_is_twice_default_parallelism():
-    """The signature-stage task count follows the cores: 8 at local[4],
-    and 64 at 32 cores (the old fixed floor, so 32-core plans are
-    unchanged)."""
+def test_core_tasks_is_default_parallelism():
+    """The signature-stage task count is one task per core: 4 at
+    local[4], 32 at 32 cores."""
     from unittest import mock
 
     from pyspark import SparkContext
 
     from datasketches_spark.session import core_tasks
 
-    for cores, tasks in ((4, 8), (32, 64)):
+    for cores in (4, 32):
         sc = mock.Mock(spec=SparkContext)
         sc.defaultParallelism = cores
-        assert core_tasks(sc) == tasks
+        assert core_tasks(sc) == cores
 
 
 def test_light_conf_window_is_per_session(spark):

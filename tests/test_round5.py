@@ -287,6 +287,12 @@ def test_light_mode_job_count_bounded(spark, tmp_path):
     # the terminal clusters.count() above is included; 25 is ~2x headroom
     # over the measured count and ~3x under the pre-light-mode regime
     assert 0 < len(jobs) <= 25, f"light-mode pipeline ran {len(jobs)} jobs"
+    # the signature stage ran one task per core: one part file each
+    ck = tmp_path / "ck" / "signatures"
+    data_dir = json.loads((ck / "manifest.json").read_text())["data_dir"]
+    parts = [f for f in os.listdir(ck / data_dir) if f.startswith("part-")]
+    assert len(parts) == sc.defaultParallelism
+    assert res.metrics["decisions"]["sig_tasks"] == sc.defaultParallelism
 
 
 # ------------------------------------------------- round-5 session seams
@@ -320,6 +326,10 @@ def test_run_dedup_light_restores_session_conf(spark):
     res.clusters.count()
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
+    # store-less light mode: the signature stage ran one task per core
+    n_cores = spark.sparkContext.defaultParallelism
+    assert res.signatures.rdd.getNumPartitions() == n_cores
+    assert res.metrics["decisions"]["sig_tasks"] == n_cores
 
 
 # ----------------- shared participant-signature subtree (round-5 session 2)
