@@ -5,28 +5,23 @@ here:
   python bench_extra.py queries          noop-isolated per-query timings
                                          (guide §1.4) at SPARK_GRAFT_SF_DIR,
                                          warm + best-of-BENCH_XREPEATS
-  python bench_extra.py verify_ablation  two-tier verify exchange ablation
-                                         (cfg.verify_mh_band off vs on) at
-                                         BENCH_N_FILES / SPARK_GRAFT_CPUS:
-                                         runs both legs in subprocesses with
-                                         event logs, reports the verify
-                                         chain's shuffle-write bytes/time
-                                         and wall, and proves the dup-pair
-                                         outputs identical across legs
+  python bench_extra.py scaling_paired   paired local[BASE] / local[4*BASE]
+                                         dedup legs through bench.py,
+                                         BENCH_PAIR_ROUNDS rounds, median
+                                         paired scaling ratio
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_N_FILES as in bench.py;
-DSS_ABLATION_BAND (default 0.35) the tier-1 band for the on-leg.
+BENCH_XREPEATS (queries); BENCH_PAIR_ROUNDS, BENCH_SCALE_BASE
+(scaling_paired).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 import time
-import uuid
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
@@ -64,107 +59,6 @@ def queries() -> None:
         out[name] = {"best": min(ts), "samples": ts}
     print(json.dumps({"mode": "queries", "sf_dir": SF_DIR, "cpus": CPUS,
                       "queries": out}))
-
-
-def _verify_leg(band: float | None, evdir: str, ckpt: str) -> None:
-    os.environ["SPARK_GRAFT_EVENTLOG"] = evdir
-    import bench as bench_mod
-    from datasketches_spark.config import DedupConfig
-    from datasketches_spark.pipeline import run_dedup
-    from datasketches_spark.session import get_spark
-
-    spark = get_spark("verify_ablation", cores=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    path = bench_mod.ensure_corpus(spark, N_FILES)
-    docs = spark.read.parquet(path)
-    cfg = DedupConfig(verify_mh_band=band)
-    t0 = time.time()
-    run_dedup(spark, docs, cfg, checkpoint_dir=ckpt,
-              light_stages=os.environ.get("BENCH_LIGHT", "1") == "1")
-    wall = time.time() - t0
-    print(json.dumps({"leg": "on" if band is not None else "off",
-                      "band": band, "wall_s": round(wall, 3)}))
-    spark.stop()
-
-
-def _verify_chain_shuffle(evdir: str) -> dict:
-    """Sum shuffle-write bytes/time + wall over jobs labeled
-    stage:verified_edges (tools/evlog.py's attribution, reduced)."""
-    sys.path.insert(0, os.path.join(_REPO, "tools"))
-    from evlog import load_events
-
-    jobs, stage_job, agg = {}, {}, {"shw_mb": 0.0, "shw_s": 0.0, "wall_s": 0.0,
-                                    "shr_mb": 0.0}
-    for ev in load_events(evdir):
-        e = ev.get("Event")
-        if e == "SparkListenerJobStart":
-            desc = (ev.get("Properties") or {}).get("spark.job.description", "")
-            jobs[ev["Job ID"]] = {"desc": desc, "start": ev["Submission Time"]}
-            for s in ev.get("Stage Infos", []):
-                stage_job[s["Stage ID"]] = ev["Job ID"]
-        elif e == "SparkListenerJobEnd":
-            j = jobs.get(ev["Job ID"])
-            if j and j["desc"].startswith("stage:verified_edges"):
-                agg["wall_s"] += (ev["Completion Time"] - j["start"]) / 1e3
-        elif e == "SparkListenerTaskEnd":
-            jid = stage_job.get(ev["Stage ID"])
-            if jid is None or not jobs[jid]["desc"].startswith("stage:verified_edges"):
-                continue
-            tm = ev.get("Task Metrics") or {}
-            sw = tm.get("Shuffle Write Metrics") or {}
-            agg["shw_mb"] += sw.get("Shuffle Bytes Written", 0) / 1e6
-            agg["shw_s"] += sw.get("Shuffle Write Time", 0) / 1e9
-            sr = tm.get("Shuffle Read Metrics") or {}
-            agg["shr_mb"] += (sr.get("Local Bytes Read", 0)
-                              + sr.get("Remote Bytes Read", 0)) / 1e6
-    return {k: round(v, 3) for k, v in agg.items()}
-
-
-def _pair_set(ckpt: str) -> set:
-    import glob
-
-    import pyarrow.parquet as pq
-
-    rows = set()
-    for f in glob.glob(os.path.join(ckpt, "dup_pairs", "*.parquet")):
-        t = pq.read_table(f, columns=["id_a", "id_b", "jaccard_kmv",
-                                      "jaccard_minhash", "kind"])
-        for a, b, jk, jm, kind in zip(*(t.column(c).to_pylist() for c in
-                                        ["id_a", "id_b", "jaccard_kmv",
-                                         "jaccard_minhash", "kind"])):
-            rows.add((a, b, round(jk, 9), round(jm, 9), kind))
-    return rows
-
-
-def verify_ablation() -> None:
-    base = os.path.join("/tmp", f"ablation_{uuid.uuid4().hex[:8]}")
-    legs = {}
-    for name, band in [("off", None), ("on", float(os.environ.get("DSS_ABLATION_BAND", "0.35")))]:
-        evdir = os.path.join(base, f"ev_{name}")
-        ckpt = os.path.join(base, f"ckpt_{name}")
-        os.makedirs(evdir, exist_ok=True)
-        env = dict(os.environ, BENCH_EXTRA_LEG=json.dumps(band),
-                   BENCH_EXTRA_EV=evdir, BENCH_EXTRA_CKPT=ckpt)
-        p = subprocess.run([sys.executable, __file__, "verify_leg"], env=env,
-                           capture_output=True, text=True, timeout=5400)
-        line = [l for l in p.stdout.strip().splitlines() if l.startswith("{")]
-        if not line:
-            sys.stderr.write(p.stderr[-4000:])
-            raise SystemExit(f"leg {name} produced no output")
-        legs[name] = json.loads(line[-1])
-        legs[name]["verify_chain"] = _verify_chain_shuffle(evdir)
-        legs[name]["_ckpt"] = ckpt
-    same = _pair_set(legs["off"]["_ckpt"]) == _pair_set(legs["on"]["_ckpt"])
-    for leg in legs.values():
-        leg.pop("_ckpt")
-    off, on = legs["off"]["verify_chain"], legs["on"]["verify_chain"]
-    print(json.dumps({
-        "mode": "verify_ablation", "n_files": N_FILES, "cpus": CPUS,
-        "off": legs["off"], "on": legs["on"],
-        "shuffle_write_mb_ratio": round(off["shw_mb"] / max(on["shw_mb"], 1e-9), 2),
-        "pair_outputs_identical": same,
-    }))
-    shutil.rmtree(base, ignore_errors=True)
 
 
 def scaling_paired() -> None:
@@ -221,12 +115,6 @@ if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if mode == "queries":
         queries()
-    elif mode == "verify_ablation":
-        verify_ablation()
-    elif mode == "verify_leg":
-        _verify_leg(json.loads(os.environ["BENCH_EXTRA_LEG"]),
-                    os.environ["BENCH_EXTRA_EV"],
-                    os.environ["BENCH_EXTRA_CKPT"])
     elif mode == "scaling_paired":
         scaling_paired()
     else:

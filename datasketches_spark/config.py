@@ -70,17 +70,6 @@ class DedupConfig:
     span_window: int = 46  # winnowing window, in shingles
     span_min_tokens: int = 50  # report pairs with a common span >= this
     span_fp_cap: int = 16  # fingerprint buckets larger than this are boilerplate: dropped + logged
-    # two-tier verification (guide §2.3 "shuffle keys and metadata instead
-    # of payloads"): when set, candidate-edge verification first exchanges
-    # ONLY the MinHash columns (~1 KB/row) and ships the KMV entry arrays
-    # (the wide 70-85% of the verify exchange) only for pairs whose
-    # MinHash estimate lands >= jaccard_threshold - verify_mh_band. A true
-    # pair at J >= threshold has P(mh_est < t - 0.35) < 1e-7 at 128 perms
-    # (binomial tail), so outputs are test-identical on every corpus;
-    # kept OFF by default because it is probabilistic, not provable — turn
-    # on at web scale where the wide exchange dominates (the boilerplate /
-    # bucket-skew regime is exactly the one it prunes).
-    verify_mh_band: float | None = None
 
     def __post_init__(self) -> None:
         _check_k(self.k)
@@ -92,8 +81,6 @@ class DedupConfig:
             raise ValueError("bands/rows must be >= 1")
         if not (0.0 < self.jaccard_threshold <= 1.0):
             raise ValueError("jaccard_threshold in (0, 1]")
-        if self.verify_mh_band is not None and not (0.0 <= self.verify_mh_band <= 1.0):
-            raise ValueError("verify_mh_band in [0, 1] (or None to disable)")
         if self.span_window < 1:
             raise ValueError("span_window must be >= 1")
         if self.span_min_tokens < self.span_window + self.ngram - 1:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datasketches_spark.config import MAX_THETA_LONG, DedupConfig
+from datasketches_spark.plans.checkpoints import CheckpointStore
 
 # memory gates shared with the pipeline: the eligible-bucket broadcast
 # budget (~48 B/row) and the participant count verify broadcasts ids for
@@ -177,18 +178,28 @@ def _jaccard_cols(cfg: DedupConfig):
     pairs took 49 s when the pull-back compared each intersection element
     against the sorted union's (k+1)-th entry inside a lambda (one sort per
     element), and 0.8 s with the k-smallest slice."""
+    min_theta = F.least(F.col("theta_a"), F.col("theta_b"))
+    ka = F.filter(F.col("kmv_a"), lambda x: x < min_theta)
+    kb = F.filter(F.col("kmv_b"), lambda x: x < min_theta)
+    inter = F.size(F.array_intersect(ka, kb))
+    n_u = F.size(ka) + F.size(kb) - inter
+    cu, ci, _, corner = _trimmed_ratio_parts(cfg)
+    kmv_j = (
+        F.when(n_u == 0, corner)  # cu == 0 ⇔ n_u == 0 below k: same corner
+        .when(n_u <= F.lit(cfg.k), inter.cast("double") / n_u.cast("double"))
+        .otherwise(F.when(cu > 0, ci / cu).otherwise(corner))
+    )
     mh_agree = F.size(
         F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda b: b)
     )
     mh_j = mh_agree.cast("double") / F.lit(float(cfg.num_perm))
-    return _kmv_jaccard_col(cfg), mh_j
+    return kmv_j, mh_j
 
 
 def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
                  left_col: str = "id_a", right_col: str = "id_b",
                  keep_below_threshold: bool = False,
                  participants_hint: int | None = None,
-                 participant_broadcast_max: int = PARTICIPANT_BROADCAST_MAX,
                  with_bounds: bool = False,
                  num_std_devs: float = 2.0,
                  participants_df: DataFrame | None = None) -> DataFrame:
@@ -227,16 +238,13 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
         F.col("kmv_entries"),
         F.col("kmv_theta"),
     )
-    if participants_hint is not None and participants_hint <= participant_broadcast_max:
+    if participants_hint is not None and participants_hint <= PARTICIPANT_BROADCAST_MAX:
         ids = participants_df if participants_df is not None else (
             pairs.select(F.col(left_col).alias("doc_id"))
             .unionByName(pairs.select(F.col(right_col).alias("doc_id")))
             .distinct()
         )
         s = s.join(F.broadcast(ids), "doc_id", "left_semi")
-    if cfg.verify_mh_band is not None and not with_bounds:
-        return _verify_pairs_two_tier(pairs, s, cfg, left_col, right_col,
-                                      keep_below_threshold)
     a = s.select(
         F.col("doc_id").alias(left_col),
         F.col("minhash").alias("mh_a"),
@@ -271,85 +279,6 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
     return out
 
 
-def _verify_pairs_two_tier(pairs: DataFrame, s: DataFrame, cfg: DedupConfig,
-                           left_col: str, right_col: str,
-                           keep_below_threshold: bool) -> DataFrame:
-    """Two-tier verification (cfg.verify_mh_band — guide §2.3 "shuffle
-    keys and metadata instead of payloads", VERDICT r5 item 2a): tier 1
-    joins the pairs against ONLY (doc_id, minhash) — ~1 KB/row instead of
-    the 4-6+ KB wide row — and computes ``jaccard_minhash``; the KMV entry
-    arrays are exchanged ONLY for pairs whose MinHash estimate lands
-    within ``verify_mh_band`` of the threshold (or above it). Pairs
-    dropped by tier 1 sit far below the threshold (mh_est <
-    t - band ⇒ P(true J >= t) is a deep binomial tail: < 1e-7 at
-    128 perms / band 0.35), so:
-
-    - filter mode: the dropped pairs would have failed the
-      ``jaccard_kmv >= t`` filter anyway — output identical;
-    - keep_below_threshold mode (star verification): dropped pairs are
-      emitted as failed edges with ``jaccard_kmv := jaccard_minhash``
-      (both < t - band by construction; downstream consumes only the
-      pass/fail split and the ids of failed edges, never the magnitude
-      of a failing estimate — verify_star_edges_with_fallback splits at
-      the threshold and then uses failed ids for bad-bucket detection).
-
-    The exchange saving is largest exactly in the boilerplate /
-    bucket-skew regime, where most candidate edges verify far below
-    threshold."""
-    thr = float(cfg.jaccard_threshold)
-    cut = thr - float(cfg.verify_mh_band)
-    a1 = s.select(F.col("doc_id").alias(left_col), F.col("minhash").alias("mh_a"))
-    b1 = s.select(F.col("doc_id").alias(right_col), F.col("minhash").alias("mh_b"))
-    mh_agree = F.size(
-        F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda b: b)
-    )
-    mh_j = mh_agree.cast("double") / F.lit(float(cfg.num_perm))
-    tier1 = (pairs.join(a1, left_col).join(b1, right_col)
-             .select(left_col, right_col, mh_j.alias("jaccard_minhash")))
-    # tier1 feeds two consumers (survivors + dropped) — cut lineage so the
-    # narrow join runs once (executor-local blocks; bounded by pair count)
-    if keep_below_threshold:
-        tier1 = tier1.localCheckpoint(eager=False)
-    survivors = tier1.filter(F.col("jaccard_minhash") >= F.lit(cut))
-    a2 = s.select(
-        F.col("doc_id").alias(left_col),
-        F.col("kmv_entries").alias("kmv_a"),
-        F.col("kmv_theta").alias("theta_a"),
-    )
-    b2 = s.select(
-        F.col("doc_id").alias(right_col),
-        F.col("kmv_entries").alias("kmv_b"),
-        F.col("kmv_theta").alias("theta_b"),
-    )
-    kmv_j = _kmv_jaccard_col(cfg)
-    verified = (survivors.join(a2, left_col).join(b2, right_col)
-                .select(F.col(left_col), F.col(right_col),
-                        kmv_j.alias("jaccard_kmv"), "jaccard_minhash"))
-    if not keep_below_threshold:
-        return verified.filter(F.col("jaccard_kmv") >= F.lit(thr))
-    dropped = tier1.filter(F.col("jaccard_minhash") < F.lit(cut)).select(
-        F.col(left_col), F.col(right_col),
-        F.col("jaccard_minhash").alias("jaccard_kmv"), "jaccard_minhash")
-    return verified.unionByName(dropped)
-
-
-def _kmv_jaccard_col(cfg: DedupConfig):
-    """The jaccard_kmv column alone (the trimmed statistic documented on
-    ``_jaccard_cols``, without the MinHash leg — also used by the two-tier
-    path, where jaccard_minhash was already computed from the narrow join)."""
-    min_theta = F.least(F.col("theta_a"), F.col("theta_b"))
-    ka = F.filter(F.col("kmv_a"), lambda x: x < min_theta)
-    kb = F.filter(F.col("kmv_b"), lambda x: x < min_theta)
-    inter = F.size(F.array_intersect(ka, kb))
-    n_u = F.size(ka) + F.size(kb) - inter
-    cu, ci, _, corner = _trimmed_ratio_parts(cfg)
-    return (
-        F.when(n_u == 0, corner)  # cu == 0 ⇔ n_u == 0 below k: same corner
-        .when(n_u <= F.lit(cfg.k), inter.cast("double") / n_u.cast("double"))
-        .otherwise(F.when(cu > 0, ci / cu).otherwise(corner))
-    )
-
-
 def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
                                     sig: DataFrame, cfg: DedupConfig,
                                     broadcast_eligible: bool = False,
@@ -370,41 +299,14 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     cap² verifications. Returns (id_a < id_b, jaccard_kmv, jaccard_minhash)
     at >= cfg.jaccard_threshold.
 
-    ``store``/``store_upstream``: when a CheckpointStore is active, the two
-    reused intermediates (verified star edges — one row per candidate edge,
-    billions at web scale — and the failed-rep bucket list) are
-    materialized as resumable checkpoint sub-stages instead of
-    ``localCheckpoint``: executor-local blocks are lost on executor death
-    and FAIL the job instead of recomputing, which on a preemptible
-    1000-executor cluster is a reliability bug. ``localCheckpoint`` remains
-    the store-less (interactive query) path."""
-    stored = store is not None and getattr(store, "enabled", False)
-
-    def _materialize(name: str, compute, upstream: list[str]):
-        if stored:
-            return store.stage(name, compute, upstream=upstream)
-        # eager=False: materialization rides the FIRST consuming action
-        # instead of costing a dedicated job per sub-stage (the consumers
-        # below run strictly sequentially, so there is no cold-cache race);
-        # lineage is truncated either way
-        return compute().localCheckpoint(eager=False)
-
-    def _n_rows(name: str, df: DataFrame) -> int:
-        """Row count of a materialized table: free off the write-job
-        Observation in the store path; one cheap count over the already-
-        materialized (tiny) localCheckpoint otherwise."""
-        if stored:
-            n = (store.manifest(name) or {}).get("n_rows")
-            if n is not None:
-                return int(n)
-        # finer label than the enclosing stage: count actions here are the
-        # verify chain's only dedicated jobs — attribution without guessing
-        sc = df.sparkSession.sparkContext
-        sc.setJobDescription(f"stage:verified_edges/{name}_count")
-        try:
-            return df.count()
-        finally:
-            sc.setJobDescription("stage:verified_edges")
+    ``store``/``store_upstream``: the run's CheckpointStore decides how
+    the reused intermediates (bucket membership, participant signatures,
+    verified star edges — one row per candidate edge, billions at web
+    scale — bad buckets, fallback pairs) are materialized: resumable
+    parquet sub-stages in full mode, ``localCheckpoint`` otherwise.
+    ``store=None`` means store-less."""
+    if store is None:
+        store = CheckpointStore(bands.sparkSession, "", cfg, enabled=False)
 
     eligible = stats.filter(
         (F.col("bucket_size") > 1) & (F.col("bucket_size") <= cfg.bucket_cap)
@@ -426,7 +328,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # and no later step re-joins bands against bucket stats. Row count ==
     # sum of eligible bucket sizes, the same order as the star-edge count.
     ups = store_upstream or []
-    memb = _materialize(
+    memb = store.substage(
         "bucket_membership",
         lambda: bands.join(eligible, ["band", "bhash"]),
         upstream=ups,
@@ -434,9 +336,9 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # ``n_memb_hint``: the caller may already know the membership row count
     # (sum of eligible bucket sizes — e.g. observed in the same job that
     # counted eligible buckets), saving the count action here
-    n_memb = n_memb_hint if n_memb_hint is not None else _n_rows(
+    n_memb = n_memb_hint if n_memb_hint is not None else store.n_rows(
         "bucket_membership", memb)
-    memb_ups = ups + (["bucket_membership"] if stored else [])
+    memb_ups = ups + ["bucket_membership"]
     # star edges stay LAZY off the materialized membership: consumed
     # exactly once (the verify probe side) now that the participant-id
     # broadcast derives from memb instead of from the pair plan
@@ -457,22 +359,20 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # the wide rows live on as (executor-local or store) blocks bounded by
     # the participant count. At web scale n_memb exceeds the gate and this
     # stays off — the plain shuffle joins run as before.
-    sig_v = sig
+    sig_v, sig_v_ups = sig, memb_ups
     if n_memb is not None and n_memb <= PARTICIPANT_BROADCAST_MAX:
-        sig_v = _materialize(
+        sig_v = store.substage(
             "participant_sigs",
             lambda: sig.select("doc_id", "minhash", "kmv_entries", "kmv_theta")
             .join(F.broadcast(memb.select("doc_id").distinct()),
                   "doc_id", "left_semi"),
             upstream=memb_ups,
         )
-        sig_v_ups = memb_ups + (["participant_sigs"] if stored else [])
-    else:
-        sig_v_ups = memb_ups
+        sig_v_ups = memb_ups + ["participant_sigs"]
     # materialize the verified star edges once: passed/failed/fb_pairs all
     # reference this subtree, and Spark re-executes unshared subplans —
     # without this the 2-join verify would run 3-4x.
-    star_v = _materialize(
+    star_v = store.substage(
         "star_verified",
         lambda: verify_pairs(star, sig_v, cfg, keep_below_threshold=True,
                              participants_hint=(None if sig_v is not sig
@@ -485,7 +385,7 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # bad_buckets is bounded by failed edges — materialize it so the
     # fallback costs one extra signature-table scan instead of two more
     # bands+stats joins
-    bad_buckets = _materialize(
+    bad_buckets = store.substage(
         "bad_buckets",
         lambda: (
             memb.join(
@@ -495,18 +395,17 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
             .select("band", "bhash")
             .distinct()
         ),
-        upstream=memb_ups + (["star_verified"] if stored else []),
+        upstream=memb_ups + ["star_verified"],
     )
     # broadcast bad_buckets into the bands re-scan ONLY when its measured
-    # row count fits (store path: free via the write-job Observation;
-    # store-less path: one bounded limit+collect over the materialized tiny
+    # row count fits (full mode: free via the write-job Observation;
+    # otherwise one bounded limit+collect over the materialized tiny
     # table). An adversarial / boilerplate-heavy corpus makes the failed-rep
     # set huge — an unguarded broadcast there is a driver OOM. ~24 B/row.
     bad_local = None
     local_cap = int(os.environ.get("DSS_FB_MATERIALIZE_BAD", "20000"))
-    if stored:
-        n_bad = (store.manifest("bad_buckets") or {}).get("n_rows")
-    else:
+    n_bad = store.n_rows("bad_buckets")
+    if n_bad is None:
         # one job instead of two: the same action that would have counted
         # bad_buckets brings the rows back when the set is small (the
         # common case — clean corpora have few failed reps), turning the
@@ -582,11 +481,11 @@ def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
     # boilerplate-heavy corpus (many failed reps) the cap²-bounded
     # self-join is worth running once, so the plan is materialized when
     # n_bad crosses the adversarial-regime threshold — as a resumable
-    # sub-stage in the store path.
+    # sub-stage in full mode.
     if n_bad is not None and n_bad > local_cap:
-        fb_pairs = _materialize(
+        fb_pairs = store.substage(
             "fallback_pairs", lambda: fb_pairs,
-            upstream=memb_ups + (["star_verified", "bad_buckets"] if stored else []),
+            upstream=memb_ups + ["star_verified", "bad_buckets"],
         )
     # the fallback participant set is bounded by bad-bucket membership —
     # at most n_bad × bucket_cap doc ids, and never more than the eligible

@@ -118,22 +118,12 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
                     light_stages: bool = False) -> DedupResult:
     """``light_stages=True`` keeps resumable parquet checkpoints only at
     the EXPENSIVE stage boundaries (signatures, verified_edges, clusters,
-    and the two deliverable tables); the cheap narrow stages between them
-    become lazy plans (multi-consumer ones cached). A full checkpoint
-    stage costs ~1 s of fixed overhead (write job + manifest + read-back
-    planning) regardless of data size — at production scale that is
-    noise, but on small-to-medium runs the 13-stage floor dominates wall
-    time. The trade: a crash mid-run re-runs at most the cheap plans
-    between two heavy boundaries, and the intra-verify sub-stages fall
-    back to ``localCheckpoint`` (executor-local blocks — fine
-    single-process / bench; keep the default full-checkpoint mode on
-    preemptible clusters)."""
+    and the two deliverable tables); a crash mid-run re-runs at most the
+    cheap plans between two of them. The stages below only say what they
+    are; the store decides how each is materialized in this run's mode
+    (table and trade-offs on ``CheckpointStore``)."""
     store = CheckpointStore(spark, checkpoint_dir or "", cfg, enabled=bool(checkpoint_dir),
                             input_fp=input_fingerprint(docs), light=light_stages)
-    # without a checkpoint dir, persist the small intermediates so the
-    # several terminal actions (clusters, pairs) don't re-run the heavy
-    # signature stage; checkpointed stages already read back from parquet
-    persist = not checkpoint_dir
 
     base = docs.withColumnRenamed(id_col, "doc_id") if id_col != "doc_id" else docs
     # content is deliberately NOT checkpointed here: docs_meta carries only
@@ -159,14 +149,12 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # re-run once per consumer
         upstream=["docs_meta"], light=True, cache=True,
     )
-    exact_edges = exact_dedup.exact_dup_edges(hashed, exact_groups)
-    if persist:
-        exact_edges = exact_edges.persist()
-        exact_edges.count()
+    # read by both the clusters and the dup_pairs stage
+    exact_edges = store.cache(exact_dedup.exact_dup_edges(hashed, exact_groups))
 
-    # light mode: the docs_meta / exact_groups CACHES are lazy, and their
-    # first consumers (dup_pairs and clusters) run CONCURRENTLY at the end
-    # of the pipeline — two fresh actions planned against a cold cache get
+    # light mode: the exact-edge CACHES are lazy, and their first
+    # consumers (dup_pairs and clusters) run CONCURRENTLY at the end of
+    # the pipeline — two fresh actions planned against a cold cache get
     # fresh shuffle ids, so both re-run the corpus scan + sha256 map side
     # (measured: a duplicated 64 core-s stage at 1M files). Materialize
     # the caches in a background thread NOW, overlapped with the python-
@@ -174,16 +162,15 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # well); the await sits right before the consumers fork.
     prewarm = None
     _edge_ups = ["verified_edges", "exact_groups"]
-    if light_stages and store.enabled and not (
-            store.is_valid("dup_pairs", store._resolve_upstream(_edge_ups))
-            and store.is_valid("clusters", store._resolve_upstream(_edge_ups))):
+    if light_stages and not (store.is_valid("dup_pairs", _edge_ups)
+                             and store.is_valid("clusters", _edge_ups)):
         # (skipped when BOTH exact-edge consumers resume from valid
         # checkpoints — a fully-resumed run must not pay a corpus scan)
         from concurrent.futures import ThreadPoolExecutor as _TPE
 
         def _warm_exact() -> None:
             spark.sparkContext.setJobDescription("stage:prewarm_exact")
-            exact_groups.count()
+            exact_edges.count()
 
         _warm_pool = _TPE(max_workers=1)
         prewarm = _warm_pool.submit(_warm_exact)
@@ -221,19 +208,14 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         "signatures",
         lambda: build_signatures(reps, cfg),
         upstream=["distinct_reps"],
+        # the band table and both verify sides read it
+        cache=True,
     )
-    n_sig_rows = None
-    if persist:
-        # eager materialization: downstream plans reference this cache from
-        # several subtrees (band table, verify a-side, verify b-side); if
-        # the cache is still cold those subtrees each recompute the whole
-        # signature stage concurrently. The count doubles as the signature
-        # row count the light-mode sizing below would otherwise read off
-        # the write-job manifest.
-        sig = sig.persist()
-        n_sig_rows = sig.count()
-    elif checkpoint_dir:
-        n_sig_rows = (store.manifest("signatures") or {}).get("n_rows")
+    # free off the write-job manifest. Store-less, the count is also the
+    # eager materialization of the cache: if it were still cold, the
+    # several subtrees that reference it would each recompute the whole
+    # signature stage concurrently.
+    n_sig_rows = store.n_rows("signatures", sig)
 
     p_small = p_post = None
     if light_stages:
@@ -242,10 +224,9 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # magnitude smaller than the corpus — would each run
         # shuffle.partitions tiny tasks (the CC stage alone ran 1100+ tasks
         # on a 7k-edge graph). Size them from the OBSERVED signature row
-        # count instead (free off the write-job manifest / the persist
-        # count): ~5k signature rows per partition, floored at core_tasks
-        # for parallelism, capped at the session setting. Restored by the
-        # run_dedup wrapper.
+        # count instead (``n_sig_rows`` above): ~5k signature rows per
+        # partition, floored at core_tasks for parallelism, capped at the
+        # session setting. Restored by the run_dedup wrapper.
         p_small = max(n_tasks, min(session_sp, n_sig_rows // 5000 + 1))
         spark.conf.set("spark.sql.shuffle.partitions", str(p_small))
 
@@ -293,8 +274,7 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # the count is huge and this stays a shuffle join
     _verify_ups = ["signatures", "bands", "bucket_stats"]
     n_memb_hint = None
-    if light_stages and (persist or not store.is_valid(
-            "verified_edges", store._resolve_upstream(_verify_ups))):
+    if light_stages and not store.is_valid("verified_edges", _verify_ups):
         # no write-job Observation in light mode. Small corpora skip the
         # count job too (a job costs ~0.2-0.7 s of fixed latency here):
         # when even the WORST-CASE bound off the signature manifest —
@@ -364,21 +344,14 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         "verified_edges",
         # star edges + per-bucket pair fallback when a rep-edge fails
         # verification (closes the false-positive-rep recall hole).
-        # The store rides inside: star_verified / bad_buckets become
-        # resumable sub-stages (reliable storage, not executor-local
-        # localCheckpoint blocks that fail the job on executor loss).
-        # light mode: sub-stages fall back to localCheckpoint (store=None)
-        # — executor-local blocks, the documented light-mode trade
+        # The store rides inside and materializes the verify sub-stages.
         lambda: verify.verify_star_edges_with_fallback(
             bands, stats, sig, cfg, broadcast_eligible=bcast_eligible,
-            store=None if light_stages else store,
-            store_upstream=["signatures", "bands", "bucket_stats"],
-            n_memb_hint=n_memb_hint),
-        upstream=["signatures", "bands", "bucket_stats"],
+            store=store, store_upstream=_verify_ups, n_memb_hint=n_memb_hint),
+        upstream=_verify_ups,
+        # the clusters and dup_pairs stages both read it
+        cache=True,
     )
-    if persist:
-        verified = verified.persist()
-        verified.count()
 
     if prewarm is not None:
         # by now the signature + verify stages have run; the prewarm is
@@ -391,9 +364,9 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # rounds (thread-safe: Spark job submission is designed for concurrent
     # driver threads, pinned-thread mode keeps job descriptions separate,
     # and the two stages write disjoint store keys). Overlapping it hides
-    # the stage's full fixed cost behind CC wall time. Span mode keeps the
-    # serial order (span_pairs feeds dup_pairs); store-less mode has no
-    # write jobs to overlap.
+    # the stage's full fixed cost behind CC wall time (store-less, the
+    # stage is a lazy plan and the thread only builds it). Span mode keeps
+    # the serial order (span_pairs feeds dup_pairs).
     # ORDERING INVARIANT — no session-conf mutation may follow this point
     # in the run: the concurrent dup_pairs write below plans against the
     # session conf at submission time, and every static resize (the
@@ -403,7 +376,7 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # mode restore in run_dedup's finally runs only after _finish_dedup —
     # and thus this future — completes.)
     dup_fut = None
-    if store.enabled and not cfg.span_pass:
+    if not cfg.span_pass:
         from concurrent.futures import ThreadPoolExecutor
         _dup_pool = ThreadPoolExecutor(max_workers=1)
         dup_fut = _dup_pool.submit(
@@ -411,27 +384,23 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
             lambda: _expand_pairs(verified, exact_edges, None),
             upstream=["verified_edges", "exact_groups"],
         )
-        # if the CC chain below raises, the in-flight write must still be
-        # awaited before the error propagates — never leave a daemon thread
-        # writing into the store behind an exception the caller is handling
         _dup_pool.shutdown(wait=False)
-        try:
-            return _finish_dedup(spark, store, cfg, checkpoint_dir, persist,
-                                 collect_metrics, light_stages, hashed, reps,
-                                 sig, exact_edges, verified, dup_fut, dropped,
-                                 decisions)
-        except BaseException:
+    try:
+        return _finish_dedup(spark, store, cfg, collect_metrics, hashed, reps, sig,
+                             exact_edges, verified, dup_fut, dropped, decisions)
+    except BaseException:
+        # if the CC chain raises, the in-flight write must still be awaited
+        # before the error propagates — never leave a daemon thread writing
+        # into the store behind an exception the caller is handling
+        if dup_fut is not None:
             from concurrent.futures import wait as _fwait
             _fwait([dup_fut])
-            raise
-    return _finish_dedup(spark, store, cfg, checkpoint_dir, persist,
-                         collect_metrics, light_stages, hashed, reps, sig,
-                         exact_edges, verified, None, dropped, decisions)
+        raise
 
 
-def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
-                  light_stages, hashed, reps, sig, exact_edges, verified,
-                  dup_fut, dropped, decisions) -> DedupResult:
+def _finish_dedup(spark, store, cfg, collect_metrics, hashed, reps, sig,
+                  exact_edges, verified, dup_fut, dropped,
+                  decisions) -> DedupResult:
     """Clustering, span pass, pair assembly and metrics — the tail of
     ``_run_dedup_impl``, split out so the concurrent dup_pairs write can be
     awaited on the error path without a try block spanning 100 lines."""
@@ -440,21 +409,16 @@ def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
         .unionByName(exact_edges)
     )
 
-    if checkpoint_dir:
-        # CC rounds truncate lineage through RELIABLE checkpoints when a
-        # checkpoint root exists: executor-local blocks die with their
+    if store.reliable:
+        # full mode: CC rounds truncate lineage through RELIABLE checkpoints
+        # under the store root — executor-local blocks die with their
         # executor (job failure, not recompute) under preemption
         import os as _os
         spark.sparkContext.setCheckpointDir(
-            _os.path.join(checkpoint_dir, "_spark_checkpoints"))
+            _os.path.join(store.root, "_spark_checkpoints"))
     clusters_nontrivial = store.stage(
         "clusters",
-        # light mode: CC rounds truncate lineage with localCheckpoint (the
-        # same executor-local trade the verify sub-stages make there);
-        # reliable rounds remain the default-mode behavior for preemptible
-        # clusters
-        lambda: connected_components(
-            all_edges, reliable=bool(checkpoint_dir) and not light_stages),
+        lambda: connected_components(all_edges, reliable=store.reliable),
         upstream=["verified_edges", "exact_groups"],
     )
     # the deliverable per-doc assignment table (singletons included) is
@@ -492,9 +456,9 @@ def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
             lambda: spans.verify_spans(span_cands, reps, cfg).filter(
                 F.col("common_span_tokens") >= F.lit(cfg.span_min_tokens)),
             upstream=["span_candidates", "distinct_reps"],
+            # dup_pairs and DedupResult.span_pairs both read it
+            cache=True,
         )
-        if persist:
-            span_verified = span_verified.persist()
 
     # report pairs: verified near-dup edges plus exact-dup pairs (via reps)
     if dup_fut is not None:
@@ -507,29 +471,25 @@ def _finish_dedup(spark, store, cfg, checkpoint_dir, persist, collect_metrics,
             + (["span_pairs"] if cfg.span_pass else []),
         )
 
-    metrics = {"lsh_threshold": cfg.lsh_threshold, "decisions": decisions}
-    if checkpoint_dir:
-        # stage-level row counts come from the manifests (recorded via
-        # Observation on each write job) — zero additional Spark jobs
-        metrics.update({
-            "n_docs": (store.manifest("docs_meta") or {}).get("n_rows"),
-            "n_distinct_content": (store.manifest("distinct_reps") or {}).get("n_rows"),
-            "n_verified_edges": (store.manifest("verified_edges") or {}).get("n_rows"),
-            "n_dropped_buckets": (store.manifest("bucket_stats") or {})
-            .get("observed", {}).get("n_dropped_buckets"),
-        })
-        store.write_metrics(metrics)
-    elif collect_metrics:
-        metrics.update({
-            "n_docs": hashed.count(),
-            "n_distinct_content": reps.count(),
-            "n_verified_edges": verified.count(),
-            "n_dropped_buckets": dropped.count(),
-        })
-    # light mode: release the plan caches this run pinned (bands, stats,
-    # docs_meta) — every deliverable is parquet-backed by its heavy stage,
-    # and repeated runs in one session must not accumulate cached tables.
-    # The returned lazy fields (docs) recompute cheaply if re-scanned.
+    # stage-level row counts come free from the manifests of written
+    # stages (recorded via Observation on each write job); the others
+    # cost a count only when collect_metrics asks for them
+    def _rows(name: str, df: DataFrame):
+        return store.n_rows(name, df if collect_metrics else None)
+
+    n_dropped = (store.manifest("bucket_stats") or {}).get("observed", {}).get(
+        "n_dropped_buckets")
+    if n_dropped is None and collect_metrics:
+        n_dropped = dropped.count()
+    metrics = {"lsh_threshold": cfg.lsh_threshold, "decisions": decisions,
+               "n_docs": _rows("docs_meta", hashed),
+               "n_distinct_content": _rows("distinct_reps", reps),
+               "n_verified_edges": _rows("verified_edges", verified),
+               "n_dropped_buckets": n_dropped}
+    store.write_metrics(metrics)
+    # release the plan caches this run pinned (bands, stats, docs_meta):
+    # with a checkpoint root every deliverable is parquet-backed, and
+    # repeated runs in one session must not accumulate cached tables
     store.release_caches()
     return DedupResult(
         docs=hashed.drop("content"),

@@ -116,7 +116,31 @@ class CheckpointStore:
     exposing only object-store-shaped PUT/GET/LIST ops — no rename, no
     isdir): the default ``LocalBackend`` maps them onto POSIX, and the
     MemoryBackend fake in tests proves the protocol needs nothing more, so
-    an S3/GCS backend is one class away."""
+    an S3/GCS backend is one class away.
+
+    The store is also the one place that decides how each stage is
+    materialized. A run is in one of three modes, fixed at construction:
+    full (``enabled``), checkpoint light (``enabled`` and ``light``) or
+    store-less (not ``enabled``, no root):
+
+    ==================  ===========  ==================  ===================
+    stage               full         checkpoint light    store-less
+    ==================  ===========  ==================  ===================
+    ``light=True``      parquet      lazy, persisted if  lazy
+                                     ``cache``
+    heavy               parquet      parquet             lazy, persisted if
+                                                         ``cache``
+    ``cache(df)``       lazy         persisted           persisted
+    ``substage``        parquet      localCheckpoint     localCheckpoint
+    CC rounds           checkpoint   localCheckpoint     localCheckpoint
+    ==================  ===========  ==================  ===================
+
+    Only full mode survives executor loss: ``localCheckpoint`` blocks live
+    on the executor that computed them and fail the job when it dies. The
+    light modes trade that, and cheap-stage resumability, for the fixed
+    cost of a parquet stage (write job + manifest PUT + read-back
+    planning, ~1 s warm): noise at production scale, but it dominates
+    small runs."""
 
     def __init__(self, spark: SparkSession, root: str, cfg: DedupConfig,
                  run_id: str = "run", enabled: bool = True,
@@ -130,30 +154,45 @@ class CheckpointStore:
         self.enabled = enabled
         self.input_fp = input_fp
         self.lineage: list[dict] = []
-        # light mode: stages marked ``light=True`` skip the parquet
-        # checkpoint entirely (returned as lazy plans, optionally cached) —
-        # resumability is kept only at the expensive stage boundaries. The
-        # per-stage fixed cost of a full checkpoint (write job + manifest
-        # PUT + read-back planning, ~1s warm) is noise at production scale
-        # but dominates small runs; light mode trades cheap-stage
-        # resumability for that floor.
         self.light = light
-        # upstream lists of stages skipped in light mode, so a heavy
+        # upstream lists of stages not written to parquet, so a written
         # stage's manifest chains through them to its nearest CHECKPOINTED
         # ancestors (a skipped stage has no manifest identity; it is a
         # deterministic function of cfg + input + those ancestors, all of
         # which the manifest already covers)
         self._skipped_upstream: dict[str, list[str]] = {}
+        # manifests of the stages this run wrote or resumed: row counts are
+        # read from here, never from a manifest another run left behind
+        self._manifests: dict[str, dict] = {}
         self._cached: list[DataFrame] = []
         if enabled:
             self.fs = backend if backend is not None else LocalBackend(root)
 
+    @property
+    def reliable(self) -> bool:
+        """Full mode: sub-stages and CC rounds go to reliable storage."""
+        return self.enabled and not self.light
+
     def release_caches(self) -> None:
-        """Unpersist every plan cache created by light-mode stages (no-op
-        otherwise). Call once the terminal stages are materialized."""
+        """Unpersist the plan caches this run pinned. Call once the
+        terminal stages are materialized. Store-less, the
+        run's deliverables are lazy plans over these caches, so they stay;
+        their lifetime is the caller's."""
+        if not self.enabled:
+            return
         for df in self._cached:
             df.unpersist()
         self._cached.clear()
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Persist a plan that several stages read, until
+        ``release_caches``. Full mode reads every stage back from parquet
+        and caches nothing (a cache there added 2 AQE jobs per run)."""
+        if self.reliable:
+            return df
+        df = df.persist()
+        self._cached.append(df)
+        return df
 
     def _resolve_upstream(self, upstream: list[str]) -> list[str]:
         out: list[str] = []
@@ -165,6 +204,23 @@ class CheckpointStore:
         # dedup, order-preserving
         seen: set[str] = set()
         return [u for u in out if not (u in seen or seen.add(u))]
+
+    def n_rows(self, name: str, df: DataFrame | None = None) -> int | None:
+        """Row count of stage ``name``: free off its manifest when this run
+        wrote or resumed it. Otherwise ``df.count()`` under a finer job
+        label (the caller's label is restored), or None without ``df``."""
+        m = self._manifests.get(name)
+        if m is not None:
+            return int(m["n_rows"])
+        if df is None:
+            return None
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"{prev}/{name}_count" if prev else f"count:{name}")
+        try:
+            return df.count()
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
 
     # ------------------------------------------------------------- stages
 
@@ -187,6 +243,7 @@ class CheckpointStore:
             return None
 
     def is_valid(self, stage: str, upstream: list[str]) -> bool:
+        upstream = self._resolve_upstream(upstream)
         if self.input_fp is None:
             # purely in-memory inputs (createDataFrame) have no stable
             # identity — never resume a prior run's outputs against them
@@ -208,7 +265,8 @@ class CheckpointStore:
             f"{stage}/{m['data_dir']}")
 
     def manifest(self, stage: str) -> dict | None:
-        return self._read_manifest(stage)
+        """The manifest of ``stage`` if this run wrote or resumed it."""
+        return self._manifests.get(stage)
 
     def stage(self, name: str, compute: Callable[[], DataFrame],
               upstream: list[str] | None = None,
@@ -216,54 +274,49 @@ class CheckpointStore:
               min_partitions: int | None = None,
               extra_obs: dict | None = None,
               light: bool = False, cache: bool = False) -> DataFrame:
-        """Run (or resume) a stage. The returned DataFrame always reads from
-        the checkpointed parquet, so downstream plans never re-execute
-        upstream stages.
+        """Run (or resume) a stage, materialized as the mode table in the
+        class docstring says. A written stage is read back from its
+        parquet, so downstream plans never re-execute upstream stages.
 
         ``extra_obs``: {name: aggregate Column} metrics to piggyback on the
         write job (recorded under manifest["observed"]) — stage-level
         metrics never cost their own Spark job.
 
-        ``light=True`` marks a stage cheap-to-recompute: in a light-mode
-        store it is NOT checkpointed — ``compute()`` must build a LAZY plan
-        (no jobs), returned as-is (``cache=True`` additionally persists it
-        for multi-consumer stages; materialization rides the first
-        consumer's job). Downstream heavy stages chain their manifests
-        through skipped stages to the nearest checkpointed ancestors."""
+        ``light=True`` marks a stage cheap to recompute and ``cache=True``
+        one with several consumers. A stage that is not written returns
+        ``compute()``'s LAZY plan (no jobs), persisted when ``cache``, so
+        materialization rides the first consumer's job. Downstream written
+        stages chain their manifests through it to the nearest
+        checkpointed ancestors."""
         upstream = upstream or []
         t0 = time.time()
         # label every Spark job fired under this stage (shows up in the UI
         # REST API / event logs — how a regression gets attributed to a
         # stage without guessing)
         self.spark.sparkContext.setJobDescription(f"stage:{name}")
-        if self.enabled and self.light and light:
+        if not self.enabled or (self.light and light):
             df = compute()
-            # min_partitions is deliberately IGNORED here: probing
+            # a checkpoint root's light plans ignore min_partitions: probing
             # ``df.rdd.getNumPartitions()`` on an AQE plan executes its
             # shuffle stages eagerly (AQE must run them to know the final
             # partitioning), silently computing the whole subtree once and
             # throwing the result away — measured as a full extra pass over
             # the corpus in light mode. Light plans flow into consumers
-            # whose own shuffles set task counts; only a PARQUET checkpoint
-            # needs an explicit file-count floor.
-            if cache:
-                df = df.persist()
-                self._cached.append(df)
-            self._skipped_upstream[name] = upstream
-            self.lineage.append({"stage": name, "resumed": False,
-                                 "checkpointed": False, "light": True})
-            return df
-        upstream = self._resolve_upstream(upstream)
-        if not self.enabled:
-            df = compute()
-            if min_partitions and df.rdd.getNumPartitions() < min_partitions:
-                # same contract as the checkpointed path: a stage feeding a
-                # compute-heavy consumer must not pin it to one input split
+            # whose own shuffles set task counts. Store-less, nothing else
+            # keeps a stage feeding a compute-heavy consumer off one split.
+            if (min_partitions and not self.enabled
+                    and df.rdd.getNumPartitions() < min_partitions):
                 df = df.repartition(min_partitions)
+            # store-less, cheap stages are recomputed, not cached: caching
+            # them added 3 jobs per run on the 400-doc corpus
+            if cache and (self.enabled or not light):
+                df = self.cache(df)
+            self._skipped_upstream[name] = upstream
             self.lineage.append({"stage": name, "resumed": False, "checkpointed": False})
             return df
+        upstream = self._resolve_upstream(upstream)
         if self.is_valid(name, upstream):
-            m = self._read_manifest(name)
+            m = self._manifests[name] = self._read_manifest(name)
             self.lineage.append({"stage": name, "resumed": True})
             # read back with the RECORDED schema: skips the footer-read
             # schema-inference job that otherwise taxes every resume
@@ -308,6 +361,7 @@ class CheckpointStore:
         }
         # the single atomic commit op: one object PUT
         self.fs.put(self._manifest_key(name), json.dumps(manifest).encode())
+        self._manifests[name] = manifest
         # GC orphan data dirs from previous runs/crashes (best-effort):
         # every key under the stage except the manifest and the live token
         stale = {k.split("/")[1] for k in self.fs.list(name)
@@ -321,6 +375,17 @@ class CheckpointStore:
         # footer-read schema-inference job — a fixed ~0.1-0.3 s tax per
         # stage that is pure overhead at any scale
         return self.spark.read.schema(df.schema).parquet(dpath)
+
+    def substage(self, name: str, compute: Callable[[], DataFrame],
+                 upstream: list[str]) -> DataFrame:
+        """An intermediate reused inside one stage (the verify chain's
+        tables): a resumable parquet stage in full mode, else
+        ``localCheckpoint(eager=False)``, whose materialization rides the
+        first consuming action instead of a dedicated job."""
+        if self.reliable:
+            return self.stage(name, compute, upstream=upstream)
+        self._skipped_upstream[name] = upstream
+        return compute().localCheckpoint(eager=False)
 
     # ------------------------------------------------------------ metrics
 

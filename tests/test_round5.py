@@ -89,7 +89,8 @@ def test_fingerprint_stable_without_changes(spark, tmp_path):
 
 def test_fallback_materialization_gate_same_result(spark, monkeypatch):
     """Forcing fallback-pair materialization (threshold 0) must not change
-    the verified output on the planted false-positive-rep scenario."""
+    the verified output on the planted false-positive-rep scenario. The
+    membership count job must not overwrite the caller's job label."""
     from datasketches_spark.operators import lsh, verify
 
     shared = list(range(1000, 1095))
@@ -103,8 +104,14 @@ def test_fallback_materialization_gate_same_result(spark, monkeypatch):
     bands = spark.createDataFrame(
         [(1, 0, 42), (2, 0, 42), (3, 0, 42)], "doc_id LONG, band INT, bhash LONG")
     stats = lsh.bucket_stats(bands)
-    base = {(r["id_a"], r["id_b"])
-            for r in verify.verify_star_edges_with_fallback(bands, stats, sig, CFG).collect()}
+    sc = spark.sparkContext
+    sc.setJobDescription("probe:fallback_gate")
+    try:
+        out = verify.verify_star_edges_with_fallback(bands, stats, sig, CFG)
+        assert sc.getLocalProperty("spark.job.description") == "probe:fallback_gate"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    base = {(r["id_a"], r["id_b"]) for r in out.collect()}
     monkeypatch.setenv("DSS_FB_MATERIALIZE_BAD", "0")
     forced = {(r["id_a"], r["id_b"])
               for r in verify.verify_star_edges_with_fallback(bands, stats, sig, CFG).collect()}
@@ -147,9 +154,11 @@ HEAVY_STAGES = {"signatures", "verified_edges", "clusters",
 
 
 def test_light_mode_equals_full_mode(spark, tmp_path):
-    """light_stages must change WHERE materialization happens, never the
-    results: identical clusters and dup_pairs, and only the expensive
-    stage boundaries get checkpoint manifests."""
+    """light_stages and the checkpoint root must change WHERE
+    materialization happens, never the results: identical clusters and
+    dup_pairs in full, checkpoint-light and store-less light mode, each
+    recording its decisions, and only the expensive stage boundaries get
+    checkpoint manifests in light mode."""
     from datasketches_spark.pipeline import run_dedup
     from datasketches_spark.sources.corpus import generate_corpus
 
@@ -159,12 +168,17 @@ def test_light_mode_equals_full_mode(spark, tmp_path):
     full = run_dedup(spark, corpus, CFG, checkpoint_dir=str(tmp_path / "full"))
     light = run_dedup(spark, corpus, CFG, checkpoint_dir=str(tmp_path / "light"),
                       light_stages=True)
+    storeless = run_dedup(spark, corpus, CFG, light_stages=True)
     fp = sorted((r["id_a"], r["id_b"]) for r in full.dup_pairs.collect())
     lp = sorted((r["id_a"], r["id_b"]) for r in light.dup_pairs.collect())
-    assert fp == lp and len(fp) > 0
+    sp = sorted((r["id_a"], r["id_b"]) for r in storeless.dup_pairs.collect())
+    assert fp == lp == sp and len(fp) > 0
     fc = sorted((r["doc_id"], r["cluster_id"]) for r in full.clusters.collect())
     lc = sorted((r["doc_id"], r["cluster_id"]) for r in light.clusters.collect())
-    assert fc == lc
+    sl = sorted((r["doc_id"], r["cluster_id"]) for r in storeless.clusters.collect())
+    assert fc == lc == sl
+    for res in (full, light, storeless):
+        assert "decisions" in res.metrics
     light_manifests = {d for d in os.listdir(str(tmp_path / "light"))
                        if os.path.isfile(os.path.join(str(tmp_path / "light"), d, "manifest.json"))}
     assert light_manifests == HEAVY_STAGES

@@ -275,66 +275,6 @@ def test_concurrent_light_runs_restore_confs(spark, tmp_path_factory):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
 
 
-def test_two_tier_verify_identical_outputs(spark, tmp_path_factory):
-    """cfg.verify_mh_band (two-tier verification): pair outputs must be
-    identical with the band on vs off — on the planted bench corpus AND
-    on the adversarial boilerplate corpus (the regime the tier-1 prune
-    targets: candidates far below threshold never ship KMV entries)."""
-    from datasketches_spark.pipeline import run_dedup
-    from datasketches_spark.sources.corpus import generate_corpus
-
-    for corpus in (generate_corpus(spark, 400, seed=42),
-                   _adversarial_corpus(spark)):
-        base = run_dedup(spark, corpus, DedupConfig(), light_stages=True)
-        tier = run_dedup(spark, corpus, DedupConfig(verify_mh_band=0.35),
-                         light_stages=True)
-        pb = {(r["id_a"], r["id_b"], round(r["jaccard_kmv"], 9),
-               round(r["jaccard_minhash"], 9))
-              for r in base.dup_pairs.collect()}
-        pt = {(r["id_a"], r["id_b"], round(r["jaccard_kmv"], 9),
-               round(r["jaccard_minhash"], 9))
-              for r in tier.dup_pairs.collect()}
-        assert pb == pt and len(pb) > 0
-
-
-def test_two_tier_verify_filter_mode_unit(spark):
-    """Unit pin: filter-mode verify_pairs with the band drops exactly the
-    pairs the full computation would have dropped; a pair whose MinHash
-    estimate sits in the band but whose KMV is below threshold still gets
-    exact KMV treatment (not a tier-1 guess)."""
-    from datasketches_spark.operators import verify
-
-    n_perm = DedupConfig().num_perm
-    shared = list(range(1000, 1090))
-    mh_same = [0] * n_perm
-    mh_half = [0] * (n_perm // 2) + list(range(1, n_perm // 2 + 1))
-    rows = [
-        (1, mh_same, sorted(shared + [1101]), kmv.MAX_THETA_LONG),
-        (2, mh_same, sorted(shared + [2101]), kmv.MAX_THETA_LONG),   # J ~ 0.978 vs 1
-        (3, mh_half, sorted(range(5000, 5100)), kmv.MAX_THETA_LONG),  # J = 0 vs 1, mh in band
-        (4, list(range(9, n_perm + 9)), sorted(range(7000, 7100)), kmv.MAX_THETA_LONG),  # mh 0
-    ]
-    sig = spark.createDataFrame(
-        rows, "doc_id LONG, minhash ARRAY<LONG>, kmv_entries ARRAY<LONG>, kmv_theta LONG")
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4)], "id_a LONG, id_b LONG")
-    cfg_off = DedupConfig()
-    cfg_on = DedupConfig(verify_mh_band=0.35)
-    off = {(r["id_a"], r["id_b"], round(r["jaccard_kmv"], 9))
-           for r in verify.verify_pairs(pairs, sig, cfg_off).collect()}
-    on = {(r["id_a"], r["id_b"], round(r["jaccard_kmv"], 9))
-          for r in verify.verify_pairs(pairs, sig, cfg_on).collect()}
-    assert off == on == {(1, 2, round(90 / 92, 9))}
-    # keep_below_threshold mode: same pass/fail split either way
-    off_all = {(r["id_a"], r["id_b"], r["jaccard_kmv"] >= cfg_off.jaccard_threshold)
-               for r in verify.verify_pairs(pairs, sig, cfg_off,
-                                            keep_below_threshold=True).collect()}
-    on_all = {(r["id_a"], r["id_b"], r["jaccard_kmv"] >= cfg_on.jaccard_threshold)
-              for r in verify.verify_pairs(pairs, sig, cfg_on,
-                                           keep_below_threshold=True).collect()}
-    assert off_all == on_all == {(1, 2, True), (1, 3, False), (1, 4, False)}
-
-
 def test_language_id_matches_specification_form(spark, docs):
     """The optimized one-pass form vs the specification: per-language
     stopword counts over whitespace-split words, first maximal wins."""
