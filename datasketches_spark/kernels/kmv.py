@@ -410,23 +410,43 @@ def a_not_b(a: ThetaSketch, b: ThetaSketch) -> ThetaSketch:
     return ThetaSketch(theta, kept, empty, a.seed)
 
 
+def jaccard_estimate(ea: np.ndarray, ta: int, eb: np.ndarray, tb: int,
+                     k: int = DEFAULT_K, both_empty: bool | None = None):
+    """(estimate, count_u, count_i, theta) of ``jaccard`` without the
+    bounds math, from sorted entry arrays and thetas: the union below
+    min-theta pulled back to nominal k as ``union`` trims, and the
+    intersection below that theta. J(∅, ∅) = 1; ``both_empty=None`` reads
+    emptiness from the table encoding (no entries at theta long.MaxValue)."""
+    t = int(min(ta, tb))
+    ka, kb = ea[ea < t], eb[eb < t]
+    inter = np.intersect1d(ka, kb, assume_unique=True)
+    count_u = ka.shape[0] + kb.shape[0] - inter.shape[0]
+    count_i = inter.shape[0]
+    if count_u > k:
+        t = int(np.union1d(ka, kb)[k])
+        count_u, count_i = k, int(np.count_nonzero(inter < t))
+    if count_u == 0:
+        if both_empty is None:
+            both_empty = (ea.shape[0] == eb.shape[0] == 0
+                          and ta == tb == MAX_THETA_LONG)
+        return (1.0 if both_empty else 0.0), 0, 0, t
+    return count_i / count_u, count_u, count_i, t
+
+
 def jaccard(a: ThetaSketch, b: ThetaSketch, k: int = DEFAULT_K, num_sdev: float = 2.0):
     """(lb, estimate, ub) of Jaccard(A, B) from two sketches: J = |A∩B|/|A∪B|
     estimated via the B-over-A ratio machinery with B = intersect(union, each)
     (BoundsOnRatiosInThetaSketchedSets.cs:45-103 applied with A := A∪B)."""
-    u = union(a, b, k=k)
-    i = intersect(a, b)
-    theta = min(u.theta, i.theta)
-    t = np.uint64(theta)
-    count_u = int(np.count_nonzero(u.entries < t))
-    count_i = int(np.count_nonzero(i.entries < t))
+    _check_merge(a, b)
+    est, count_u, count_i, theta = jaccard_estimate(
+        a.entries, a.theta, b.entries, b.theta, k, both_empty=a.empty and b.empty)
     if count_u == 0:
-        return (1.0, 1.0, 1.0) if (a.empty and b.empty) else (0.0, 0.0, 0.0)
+        return est, est, est
     # inclusion probability f = theta/2^63 drives the bound width
     # (BoundsOnRatiosInThetaSketchedSets.cs:59,83: f = thetaLongB / 2^63-1)
     f = theta / float(MAX_THETA_LONG)
-    est, lb, ub = _bounds.ratio_bounds(count_u, count_i, f, num_sdev)
-    return float(lb), float(est), float(ub)
+    _, lb, ub = _bounds.ratio_bounds(count_u, count_i, f, num_sdev)
+    return float(lb), est, float(ub)
 
 
 # ----------------------------------------------------------- serialization

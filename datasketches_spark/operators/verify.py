@@ -1,6 +1,5 @@
 """Candidate verification: estimated Jaccard from the per-document KMV
-sketches — entirely in Spark SQL array functions (JVM, whole-stage
-codegen), no Python in the hot path.
+sketches.
 
 This is the Spark mapping of the reference's B-over-A ratio machinery
 (/root/reference/ThetaCommon/BoundsOnRatiosInThetaSketchedSets.cs:45-103):
@@ -9,9 +8,15 @@ for two sketches with thetas θa, θb and entry sets A, B, using
 
     J ≈ |{A ∩ B} < θ| / |{A ∪ B} < θ|
 
-KMV entries are stored as int64 but every value is < 2^63, so signed and
-unsigned comparisons agree and ``array_intersect``/``array_union``/
-``least`` operate on the raw bits correctly.
+Two forms share that statistic (``kmv.jaccard_estimate``):
+
+- ``verify_pairs`` verifies a given pair list entirely in Spark SQL array
+  functions (JVM, whole-stage codegen, no Python), with optional 2σ
+  bounds. KMV entries are stored as int64 but every value is < 2^63, so
+  signed and unsigned comparisons agree and ``array_intersect``/
+  ``array_union``/``least`` operate on the raw bits correctly.
+- ``verify_star_edges_with_fallback`` verifies the pipeline's LSH buckets
+  in one pandas pass over one row per distinct bucket member set.
 
 A MinHash slot-agreement estimate is carried alongside as a cross-check
 column (fraction of agreeing signature slots is an unbiased Jaccard
@@ -20,18 +25,17 @@ estimator)."""
 from __future__ import annotations
 
 import math
-import os
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datasketches_spark.config import MAX_THETA_LONG, DedupConfig
-from datasketches_spark.plans.checkpoints import CheckpointStore
+from datasketches_spark.kernels import kmv
 
-# memory gates shared with the pipeline: the eligible-bucket broadcast
-# budget (~48 B/row) and the participant count verify broadcasts ids for
+# the eligible-bucket broadcast budget the pipeline gates on (~48 B/row)
 BROADCAST_BUDGET_BYTES = 256 * 1024 * 1024
-PARTICIPANT_BROADCAST_MAX = 4_000_000
 
 # ---- Jaccard confidence bounds as pure Spark column math --------------
 # The reference's marquee B-over-A bounds machinery
@@ -199,10 +203,8 @@ def _jaccard_cols(cfg: DedupConfig):
 def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
                  left_col: str = "id_a", right_col: str = "id_b",
                  keep_below_threshold: bool = False,
-                 participants_hint: int | None = None,
                  with_bounds: bool = False,
-                 num_std_devs: float = 2.0,
-                 participants_df: DataFrame | None = None) -> DataFrame:
+                 num_std_devs: float = 2.0) -> DataFrame:
     """pairs(id_a, id_b) × signatures → (id_a, id_b, jaccard_kmv,
     jaccard_minhash) filtered at cfg.jaccard_threshold.
 
@@ -213,24 +215,7 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
     >= t at 2-sigma confidence" is answerable without leaving Spark
     (filter on ``jaccard_lb >= t``).
 
-    Two equi-joins against the signature table. The signature rows are WIDE
-    (k=4096 KMV entries ≈ 32 KB each), so shuffling the whole table through
-    both joins moves ~2 × corpus-size × 32 KB — while the pair list usually
-    touches a small fraction of the corpus. When the caller knows an upper
-    bound on the number of participating doc ids (``participants_hint``,
-    e.g. the pair-table row count off a checkpoint Observation × 2) and it
-    is broadcastable, the wide table is first semi-filtered by a BROADCAST
-    of the participant ids — the signature table is then only scanned, never
-    shuffled at full width; the pair joins shuffle just the participating
-    rows. With no hint (or a too-large bound) the plain shuffle joins run
-    and AQE picks strategies at runtime.
-
-    ``participants_df``: an explicit (doc_id) superset of the pair
-    participants, used for the semi-filter INSTEAD of re-deriving the ids
-    from ``pairs``. Deriving from ``pairs`` executes the pair plan twice
-    (ids broadcast + join probe); when the caller holds a cheaper superset
-    plan (e.g. bucket membership), passing it keeps the pair plan
-    single-execution. Ignored unless the hint gates the broadcast on.
+    Two equi-joins against the signature table.
     """
     s = sig.select(
         F.col("doc_id"),
@@ -238,13 +223,6 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
         F.col("kmv_entries"),
         F.col("kmv_theta"),
     )
-    if participants_hint is not None and participants_hint <= PARTICIPANT_BROADCAST_MAX:
-        ids = participants_df if participants_df is not None else (
-            pairs.select(F.col(left_col).alias("doc_id"))
-            .unionByName(pairs.select(F.col(right_col).alias("doc_id")))
-            .distinct()
-        )
-        s = s.join(F.broadcast(ids), "doc_id", "left_semi")
     a = s.select(
         F.col("doc_id").alias(left_col),
         F.col("minhash").alias("mh_a"),
@@ -279,235 +257,80 @@ def verify_pairs(pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
     return out
 
 
+def _verify_member_set(ids, mh, ents, ths, cfg: DedupConfig) -> list[tuple]:
+    """(id_a, id_b, jaccard_kmv, jaccard_minhash) rows at or above the
+    threshold for one bucket member set, given sorted by id: the star
+    edges from its minimum id (the bucket representative) and, only if
+    one of them fails, every pair of the set."""
+    ths = [int(t) for t in ths]
+
+    def est(i, j):
+        return kmv.jaccard_estimate(ents[i], ths[i], ents[j], ths[j], cfg.k)[0]
+
+    pairs = [(0, j) for j in range(1, len(ids))]
+    j_kmv = [est(0, j) for j in range(1, len(ids))]
+    if min(j_kmv, default=1.0) < cfg.jaccard_threshold:
+        rest = [(i, j) for i in range(1, len(ids)) for j in range(i + 1, len(ids))]
+        pairs += rest
+        j_kmv += [est(i, j) for i, j in rest]
+    return [(ids[i], ids[j], jk,
+             np.count_nonzero(mh[i] == mh[j]) / float(cfg.num_perm))
+            for (i, j), jk in zip(pairs, j_kmv) if jk >= cfg.jaccard_threshold]
+
+
 def verify_star_edges_with_fallback(bands: DataFrame, stats: DataFrame,
                                     sig: DataFrame, cfg: DedupConfig,
                                     broadcast_eligible: bool = False,
                                     store=None,
                                     store_upstream: list[str] | None = None,
-                                    bad_bucket_broadcast_max_bytes: int = 64 * 1024 * 1024,
-                                    n_memb_hint: int | None = None,
                                     ) -> DataFrame:
-    """Star-edge verification with a per-bucket pair fallback that closes
-    the false-positive-representative recall hole: if a bucket's rep r is an
-    LSH false positive, edges (r→x, r→y) both fail verification and the true
-    pair (x, y) would be lost even though all three shared a bucket. Any
-    bucket with a FAILED rep-edge is re-enumerated as full intra-bucket
-    pairs (bounded by cfg.bucket_cap) and those pairs verified too.
+    """Verified edges of the eligible LSH buckets (size in (1,
+    bucket_cap]): (id_a < id_b, jaccard_kmv, jaccard_minhash) at >=
+    cfg.jaccard_threshold, each pair once.
 
-    Cost is proportional to buckets containing a failed edge — on a clean
-    corpus the fallback branch is empty; adversarial buckets pay at most
-    cap² verifications. Returns (id_a < id_b, jaccard_kmv, jaccard_minhash)
-    at >= cfg.jaccard_threshold.
+    A bucket verifies its star edges (minimum id → member) and, if one
+    fails, all its ≤ bucket_cap² pairs: the minimum id may be an LSH
+    false positive between two true near duplicates. Equal member sets
+    give equal edges, and near duplicates colliding in several bands
+    repeat one set, so each DISTINCT sorted member set is verified once.
+    The key is the set itself (a hash could merge two sets). Each set's
+    signature columns are gathered into one row in the JVM and one
+    ``mapInPandas`` pass loops over the rows: a pandas frame per set, as
+    ``applyInPandas`` builds, cost ~1 ms per set (6k sets at 40k files).
 
-    ``store``/``store_upstream``: the run's CheckpointStore decides how
-    the reused intermediates (bucket membership, participant signatures,
-    verified star edges — one row per candidate edge, billions at web
-    scale — bad buckets, fallback pairs) are materialized: resumable
-    parquet sub-stages in full mode, ``localCheckpoint`` otherwise.
-    ``store=None`` means store-less."""
-    if store is None:
-        store = CheckpointStore(bands.sparkSession, "", cfg, enabled=False)
-
+    ``store``/``store_upstream`` are accepted and unused."""
     eligible = stats.filter(
         (F.col("bucket_size") > 1) & (F.col("bucket_size") <= cfg.bucket_cap)
-    ).select("band", "bhash", "rep")
+    ).select("band", "bhash")
     if broadcast_eligible:
         # non-singleton buckets are usually a tiny fraction of all buckets;
-        # when the caller KNOWS the count is broadcastable (the pipeline
-        # reads it off the bucket_stats write-job Observation), hinting it
-        # turns candidate generation into a map-only pass over the bands —
-        # no shuffle of the 40x-corpus-sized band table. At true web scale
-        # the count is large and the caller leaves this off (shuffle join).
+        # the caller sets this only when it KNOWS the count is
+        # broadcastable, which makes membership a map-only pass over the
+        # bands. At web scale it stays a shuffle join.
         eligible = F.broadcast(eligible)
-    # materialize ELIGIBLE BUCKET MEMBERSHIP once (band, bhash, doc_id,
-    # rep — 4 longs per member of a non-singleton within-cap bucket): it is
-    # the shared root of everything downstream — star edges, the verify
-    # participant-id set, failed-rep bucket detection AND the fallback
-    # pair re-enumeration all derive from it with narrow ops, so the bands
-    # scan (the largest narrow table in the pipeline) runs exactly once
-    # and no later step re-joins bands against bucket stats. Row count ==
-    # sum of eligible bucket sizes, the same order as the star-edge count.
-    ups = store_upstream or []
-    memb = store.substage(
-        "bucket_membership",
-        lambda: bands.join(eligible, ["band", "bhash"]),
-        upstream=ups,
-    )
-    # ``n_memb_hint``: the caller may already know the membership row count
-    # (sum of eligible bucket sizes — e.g. observed in the same job that
-    # counted eligible buckets), saving the count action here
-    n_memb = n_memb_hint if n_memb_hint is not None else store.n_rows(
-        "bucket_membership", memb)
-    memb_ups = ups + ["bucket_membership"]
-    # star edges stay LAZY off the materialized membership: consumed
-    # exactly once (the verify probe side) now that the participant-id
-    # broadcast derives from memb instead of from the pair plan
-    star = (
-        memb.filter(F.col("doc_id") != F.col("rep"))
-        .select(F.col("rep").alias("id_a"), F.col("doc_id").alias("id_b"))
+    sets = (
+        bands.join(eligible, ["band", "bhash"])
+        .groupBy("band", "bhash")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("members"))
+        .select("members")
         .distinct()
     )
-    # when the membership count clears the participant-broadcast gate,
-    # materialize the SEMI-FILTERED participant signatures once and verify
-    # BOTH passes (star + fallback) against it: every verify participant —
-    # star edges and fallback pairs alike — is a member of an eligible
-    # bucket, so this one table serves the whole chain. Without it the
-    # fallback verify re-scans the full-width signature parquet a second
-    # time (measured 2.7 GB scan + 2.7 GB full-width shuffle at 1M files
-    # when its own n_bad x bucket_cap hint overshot the broadcast gate);
-    # with it the signature parquet is scanned exactly once per run and
-    # the wide rows live on as (executor-local or store) blocks bounded by
-    # the participant count. At web scale n_memb exceeds the gate and this
-    # stays off — the plain shuffle joins run as before.
-    sig_v, sig_v_ups = sig, memb_ups
-    if n_memb is not None and n_memb <= PARTICIPANT_BROADCAST_MAX:
-        sig_v = store.substage(
-            "participant_sigs",
-            lambda: sig.select("doc_id", "minhash", "kmv_entries", "kmv_theta")
-            .join(F.broadcast(memb.select("doc_id").distinct()),
-                  "doc_id", "left_semi"),
-            upstream=memb_ups,
-        )
-        sig_v_ups = memb_ups + ["participant_sigs"]
-    # materialize the verified star edges once: passed/failed/fb_pairs all
-    # reference this subtree, and Spark re-executes unshared subplans —
-    # without this the 2-join verify would run 3-4x.
-    star_v = store.substage(
-        "star_verified",
-        lambda: verify_pairs(star, sig_v, cfg, keep_below_threshold=True,
-                             participants_hint=(None if sig_v is not sig
-                                                else n_memb),
-                             participants_df=memb.select("doc_id").distinct()),
-        upstream=sig_v_ups,
+    cols = ["doc_id", "minhash", "kmv_entries", "kmv_theta"]
+    # sorting the structs orders the members by doc_id, the first field
+    gathered = (
+        sets.select("members", F.explode("members").alias("doc_id"))
+        .join(sig.select(*cols), "doc_id")
+        .groupBy("members")
+        .agg(F.array_sort(F.collect_list(F.struct(*cols))).alias("m"))
+        .select(*(F.col(f"m.{c}").alias(c) for c in cols))
     )
-    passed = star_v.filter(F.col("jaccard_kmv") >= F.lit(cfg.jaccard_threshold))
-    failed = star_v.filter(F.col("jaccard_kmv") < F.lit(cfg.jaccard_threshold))
-    # bad_buckets is bounded by failed edges — materialize it so the
-    # fallback costs one extra signature-table scan instead of two more
-    # bands+stats joins
-    bad_buckets = store.substage(
-        "bad_buckets",
-        lambda: (
-            memb.join(
-                failed.select(F.col("id_a").alias("rep"), F.col("id_b").alias("doc_id")),
-                ["rep", "doc_id"],
-            )
-            .select("band", "bhash")
-            .distinct()
-        ),
-        upstream=memb_ups + ["star_verified"],
-    )
-    # broadcast bad_buckets into the bands re-scan ONLY when its measured
-    # row count fits (full mode: free via the write-job Observation;
-    # otherwise one bounded limit+collect over the materialized tiny
-    # table). An adversarial / boilerplate-heavy corpus makes the failed-rep
-    # set huge — an unguarded broadcast there is a driver OOM. ~24 B/row.
-    bad_local = None
-    local_cap = int(os.environ.get("DSS_FB_MATERIALIZE_BAD", "20000"))
-    n_bad = store.n_rows("bad_buckets")
-    if n_bad is None:
-        # one job instead of two: the same action that would have counted
-        # bad_buckets brings the rows back when the set is small (the
-        # common case — clean corpora have few failed reps), turning the
-        # bands re-scan's build side into a driver-local relation whose
-        # broadcast needs no separate Spark job under static planning.
-        # Bounded by the adversarial-regime threshold, so the collect can
-        # never pull more than ~0.5 MB; past it, fall back to the exact
-        # distributed count (amortized at that scale).
-        rows = bad_buckets.limit(local_cap + 1).collect()
-        if len(rows) <= local_cap:
-            n_bad = len(rows)
-            if rows:
-                # through pandas, NOT the list-of-Rows overload: under
-                # arrow.localRelationThreshold (default 48 MB, far above
-                # the 0.5 MB cap here) the pandas path plans a pure-JVM
-                # LocalRelation, while list-of-Rows plans a PythonRDD
-                # whose broadcast build runs a default-parallelism python
-                # stage — measured as a cold 32-worker pool spawn (6-22 s
-                # on this host class) sitting inside the verify chain.
-                import pandas as _pd
+    id_type = sig.schema["doc_id"].dataType.simpleString()
+    schema = f"id_a {id_type}, id_b {id_type}, jaccard_kmv double, jaccard_minhash double"
 
-                bad_local = bands.sparkSession.createDataFrame(
-                    _pd.DataFrame([tuple(r) for r in rows],
-                                  columns=bad_buckets.schema.names),
-                    bad_buckets.schema)
-        else:
-            n_bad = bad_buckets.count()
-    if n_bad == 0:
-        # no failed-rep buckets anywhere (the common case on clean corpora):
-        # the whole fallback subtree — bad-bucket re-scan, intra-bucket
-        # self-join, anti-join, second verify pass and their 3-4 broadcast
-        # jobs of fixed scheduler latency each — is provably empty. Return
-        # the passed star edges directly.
-        return passed
-    bcast_ok = n_bad is not None and n_bad * 24 < bad_bucket_broadcast_max_bytes
-    # bad buckets are eligible by construction (came from memb), so their
-    # full membership is a subset of the MATERIALIZED memb table — re-scan
-    # that, never the far larger raw band table. The driver-local form (if
-    # the bounded collect produced one) is strictly better than
-    # broadcasting the distributed table: same rows, no broadcast-build job.
-    bad_side = bad_local if bad_local is not None else bad_buckets
-    bb = memb.join(F.broadcast(bad_side) if bcast_ok else bad_side,
-                   ["band", "bhash"])
-    a = bb.select("band", "bhash", F.col("doc_id").alias("id_a"))
-    b = bb.select("band", "bhash", F.col("doc_id").alias("id_b"))
-    # bb's row count is bounded by n_bad x bucket_cap (~24 B/row), so the
-    # intra-bucket self-join can broadcast its build side under the same
-    # measured gate as bad_buckets itself — and the anti-join's build side
-    # (passed star edges, <= n_memb rows x ~16 B) under the membership
-    # bound. Under static planning (light mode) these hints are the
-    # difference between map-side joins and three full shuffle stages of
-    # fixed scheduler latency each; with AQE they match what runtime
-    # re-planning would pick anyway. Both gates fail closed to shuffles at
-    # web scale.
-    fb_b_ok = (n_bad is not None
-               and n_bad * cfg.bucket_cap * 24 < bad_bucket_broadcast_max_bytes)
-    passed_ok = (n_memb is not None
-                 and n_memb * 16 < bad_bucket_broadcast_max_bytes)
-    fb_pairs = (
-        a.join(F.broadcast(b) if fb_b_ok else b, ["band", "bhash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .join(F.broadcast(passed.select("id_a", "id_b")) if passed_ok
-              else passed.select("id_a", "id_b"),
-              ["id_a", "id_b"], "left_anti")
-    )
-    # verify_pairs consumes the pair plan TWICE when it broadcasts the
-    # participant-id set (distinct-ids side + join probe side). On a clean
-    # corpus bad buckets are rare (the bench corpus sits ~10^3) and
-    # re-running the bounded subtree twice is cheaper than another
-    # materialization stage (~1.3 s fixed); on an adversarial
-    # boilerplate-heavy corpus (many failed reps) the cap²-bounded
-    # self-join is worth running once, so the plan is materialized when
-    # n_bad crosses the adversarial-regime threshold — as a resumable
-    # sub-stage in full mode.
-    if n_bad is not None and n_bad > local_cap:
-        fb_pairs = store.substage(
-            "fallback_pairs", lambda: fb_pairs,
-            upstream=memb_ups + ["star_verified", "bad_buckets"],
-        )
-    # the fallback participant set is bounded by bad-bucket membership —
-    # at most n_bad × bucket_cap doc ids, and never more than the eligible
-    # membership count (bb ⊆ memb), so the verify broadcast decision needs
-    # no materialized count: take the tighter of the two bounds (the
-    # cap-based one overshoots ~50x on real bucket-size distributions and
-    # used to wrongly disable the semi-filter at 1M files). The ids come
-    # from the bucket-membership plan (bb) directly, NOT from fb_pairs:
-    # deriving them from the pairs would execute the cap²-bounded
-    # self-join subtree twice (ids + probe). The probe runs against sig_v —
-    # the already-filtered participant table when the gate is on — so a
-    # fallback never re-scans the full-width signature parquet.
-    n_fb_partic = None
-    if n_bad is not None:
-        n_fb_partic = n_bad * cfg.bucket_cap
-        if n_memb is not None:
-            n_fb_partic = min(n_fb_partic, n_memb)
-    fb_v = verify_pairs(fb_pairs, sig_v, cfg, participants_hint=n_fb_partic,
-                        participants_df=bb.select("doc_id").distinct())
-    # the union is duplicate-free by construction — star edges are distinct
-    # with id_a = bucket-min < id_b, fb_pairs are distinct with id_a < id_b
-    # and anti-joined against passed — so no terminal dropDuplicates
-    # shuffle. (pipeline._expand_pairs dedups once more across edge KINDS,
-    # where exact/near overlap is possible.)
-    return passed.unionByName(fb_v)
+    def verify_sets(batches):
+        for pdf in batches:
+            rows = [r for s in zip(*(pdf[c] for c in cols))
+                    for r in _verify_member_set(*s, cfg)]
+            yield pd.DataFrame(rows, columns=["id_a", "id_b", "jaccard_kmv", "jaccard_minhash"])
+
+    return gathered.mapInPandas(verify_sets, schema).dropDuplicates(["id_a", "id_b"])

@@ -9,8 +9,8 @@ Stage graph (every stage is a resumable checkpoint, SURVEY §7 stage 1):
     ├─ signatures: mapInPandas murmur3/KMV/MinHash/SimHash   [no shuffle]
     ├─ bands: posexplode(xxhash64 band keys)   [no shuffle]
     ├─ buckets: groupBy(band, bhash) min/count [1 shuffle, skew-immune]
-    ├─ candidate star edges: bands ⋈ buckets   [AQE skew join]
-    ├─ verified edges: KMV Jaccard ≥ t         [2 joins vs signatures]
+    ├─ verified edges: per distinct bucket member set, star edges from
+    │    its min id, all pairs if one fails    [one grouped pandas pass]
     ├─ all edges = exact ∪ (verified mapped through content reps)
     ├─ clusters: large-star/small-star CC      [iterative, checkpointed]
     └─ dup_pairs + cluster assignments + metrics/lineage
@@ -62,15 +62,23 @@ def run_dedup(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     count-guarded by the pipeline itself. Default (heavy) mode keeps AQE —
     at web scale its skew-join splitting and runtime re-planning are
     load-bearing and the per-job floor is noise."""
-    if not light_stages:
-        return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col,
-                               collect_metrics, light_stages)
-    # every pipeline-internal action (stage writes, caches, CC rounds)
-    # runs inside this window; the returned heavy tables are parquet
-    # read-backs whose later consumption doesn't care about AQE
-    with _light_conf_window(spark):
-        return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col,
-                               collect_metrics, light_stages)
+    # stages label their jobs and never clear the label: restore the
+    # caller's, so jobs run on the returned tables are not attributed to
+    # the last stage
+    sc = spark.sparkContext
+    label = sc.getLocalProperty("spark.job.description")
+    try:
+        if not light_stages:
+            return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col,
+                                   collect_metrics, light_stages)
+        # every pipeline-internal action (stage writes, caches, CC rounds)
+        # runs inside this window; the returned heavy tables are parquet
+        # read-backs whose later consumption doesn't care about AQE
+        with _light_conf_window(spark):
+            return _run_dedup_impl(spark, docs, cfg, checkpoint_dir, id_col,
+                                   collect_metrics, light_stages)
+    finally:
+        sc.setLocalProperty("spark.job.description", label)
 
 
 @contextmanager
@@ -230,14 +238,13 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         p_small = max(n_tasks, min(session_sp, n_sig_rows // 5000 + 1))
         spark.conf.set("spark.sql.shuffle.partitions", str(p_small))
 
-    # the band table is consumed by FIVE subtrees (bucket stats, star-edge
-    # membership, bad-bucket re-scan, both sides of the fallback self-join);
-    # left as a plan, each consumer re-reads the wide signature parquet and
-    # recomputes 16 band hashes + posexplode. Materialized once it is a
-    # NARROW table (doc_id, band, bhash — ~24 B/row vs the ~1 KB/row
-    # minhash column every re-derivation decodes), so one write replaces
-    # four full signature-column scans — at any scale the narrow-table
-    # reads are strictly cheaper.
+    # the band table is consumed by bucket stats and verify's bucket
+    # membership; left as a plan, each consumer re-reads the wide
+    # signature parquet and recomputes 16 band hashes + posexplode.
+    # Materialized once it is a NARROW table (doc_id, band, bhash —
+    # ~24 B/row vs the ~1 KB/row minhash column every re-derivation
+    # decodes), so the narrow-table reads are strictly cheaper at any
+    # scale.
     bands = store.stage(
         "bands",
         lambda: lsh.band_table(sig, cfg),
@@ -248,10 +255,9 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     )
     # singleton buckets (the overwhelming majority — ~90% of all buckets
     # at 1M files, and ~everything at 10^12) are consumed by NOTHING
-    # downstream: candidate generation, the fallback pass and both
-    # Observations only ever look at bucket_size > 1. Filtering them
-    # BEFORE the materialization cuts the stats write (and every
-    # downstream rescan/join of the table) ~10x.
+    # downstream: verification and both Observations only ever look at
+    # bucket_size > 1. Filtering them BEFORE the materialization cuts the
+    # stats write (and every downstream rescan/join of the table) ~10x.
     stats = store.stage(
         "bucket_stats",
         lambda: lsh.bucket_stats(bands).filter(F.col("bucket_size") > 1),
@@ -269,11 +275,11 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # tiny eligible side at runtime and picks the broadcast join itself
         light=True, cache=True,
     )
-    # broadcast the eligible-bucket side of candidate generation when its
-    # observed count fits comfortably in memory (~48B/row); at web scale
+    # broadcast the eligible-bucket side of verify's bucket membership when
+    # its observed count fits comfortably in memory (~48B/row); at web scale
     # the count is huge and this stays a shuffle join
     _verify_ups = ["signatures", "bands", "bucket_stats"]
-    n_memb_hint = None
+    n_memb = None
     if light_stages and not store.is_valid("verified_edges", _verify_ups):
         # no write-job Observation in light mode. Small corpora skip the
         # count job too (a job costs ~0.2-0.7 s of fixed latency here):
@@ -286,22 +292,13 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # count is usually still broadcastable — non-singleton buckets
         # are a tiny fraction) pay ONE aggregation job for an informed
         # decision; at that scale the job is amortized anyway. The same
-        # job sums eligible bucket sizes == the bucket-membership row
-        # count, saving the verify stage its own count action. Skipped on
-        # resume: a valid verified_edges never needs the caches at all.
+        # bound (every doc sits in <= bands buckets) or job (the sum of
+        # eligible bucket sizes) gives the bucket-membership row count
+        # that sizes the post-LSH shuffles below. Skipped on resume: a
+        # valid verified_edges never needs the caches at all.
         worst = n_sig_rows * cfg.bands if n_sig_rows else None
         if worst is not None and worst * 48 < verify.BROADCAST_BUDGET_BYTES:
-            n_eligible = worst
-            # the same bound covers bucket MEMBERSHIP rows (every doc sits
-            # in <= bands buckets, so members-of-eligible-buckets <= band
-            # rows == worst): passing it saves the verify chain its own
-            # membership count job (~one full job of fixed latency). Only
-            # when the bound also clears the participant-broadcast gate —
-            # an overestimate in between would wrongly DISABLE the wide-row
-            # semi-filter broadcast a real count would enable; there the
-            # verify chain's own count is the right call (and amortized).
-            if worst <= verify.PARTICIPANT_BROADCAST_MAX:
-                n_memb_hint = worst
+            n_eligible = n_memb = worst
         else:
             spark.sparkContext.setJobDescription("hint:n_eligible")
             _elig = F.col("bucket_size") <= cfg.bucket_cap  # stats already > 1
@@ -310,16 +307,16 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
                 F.sum(F.when(_elig, F.col("bucket_size"))).alias("n_memb"),
             ).first()
             n_eligible = int(row["n_eligible"])
-            n_memb_hint = int(row["n_memb"] or 0)
+            n_memb = int(row["n_memb"] or 0)
     else:
         bucket_obs = (store.manifest("bucket_stats") or {}).get("observed", {})
         n_eligible = bucket_obs.get("n_eligible_buckets")
     bcast_eligible = (n_eligible is not None
                       and n_eligible * 48 < verify.BROADCAST_BUDGET_BYTES)
 
-    if light_stages and n_memb_hint is not None:
+    if light_stages and n_memb is not None:
         # second static resize, at the LSH boundary: every shuffle from
-        # here on (star distinct, the verify joins, fallback, dup_pairs,
+        # here on (the member-set reduction and verify pass, dup_pairs,
         # all CC rounds, cluster assembly) runs over tables bounded by the
         # bucket MEMBERSHIP row count — typically another ~20x below the
         # signature count the p_small sizing above used. Event-log
@@ -333,21 +330,19 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # granularity stays DATA-derived (identical across probe legs,
         # grows back to the session cap as membership grows — a no-op at
         # web scale).
-        p_post = max(n_tasks, min(p_small, n_memb_hint // 50000 + 1))
+        p_post = max(n_tasks, min(p_small, n_memb // 50000 + 1))
         spark.conf.set("spark.sql.shuffle.partitions", str(p_post))
     # data-derived sizing and broadcast choices (None: not made in this mode)
     decisions = dict(sig_tasks=n_tasks if light_stages else None, p_small=p_small,
-                     p_post=p_post, bcast_eligible=bcast_eligible, n_memb_hint=n_memb_hint)
+                     p_post=p_post, bcast_eligible=bcast_eligible, n_memb=n_memb)
 
-    _, dropped = lsh.candidate_edges(bands, cfg, stats)
+    dropped = stats.filter(F.col("bucket_size") > cfg.bucket_cap)
     verified = store.stage(
         "verified_edges",
-        # star edges + per-bucket pair fallback when a rep-edge fails
-        # verification (closes the false-positive-rep recall hole).
-        # The store rides inside and materializes the verify sub-stages.
+        # star edges, and every pair of a bucket whose star edge fails
+        # (closes the false-positive-rep recall hole)
         lambda: verify.verify_star_edges_with_fallback(
-            bands, stats, sig, cfg, broadcast_eligible=bcast_eligible,
-            store=store, store_upstream=_verify_ups, n_memb_hint=n_memb_hint),
+            bands, stats, sig, cfg, broadcast_eligible=bcast_eligible),
         upstream=_verify_ups,
         # the clusters and dup_pairs stages both read it
         cache=True,

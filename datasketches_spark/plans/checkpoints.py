@@ -131,7 +131,6 @@ class CheckpointStore:
     heavy               parquet      parquet             lazy, persisted if
                                                          ``cache``
     ``cache(df)``       lazy         persisted           persisted
-    ``substage``        parquet      localCheckpoint     localCheckpoint
     CC rounds           checkpoint   localCheckpoint     localCheckpoint
     ==================  ===========  ==================  ===================
 
@@ -170,7 +169,7 @@ class CheckpointStore:
 
     @property
     def reliable(self) -> bool:
-        """Full mode: sub-stages and CC rounds go to reliable storage."""
+        """Full mode: CC rounds go to reliable storage."""
         return self.enabled and not self.light
 
     def release_caches(self) -> None:
@@ -375,17 +374,6 @@ class CheckpointStore:
         # footer-read schema-inference job — a fixed ~0.1-0.3 s tax per
         # stage that is pure overhead at any scale
         return self.spark.read.schema(df.schema).parquet(dpath)
-
-    def substage(self, name: str, compute: Callable[[], DataFrame],
-                 upstream: list[str]) -> DataFrame:
-        """An intermediate reused inside one stage (the verify chain's
-        tables): a resumable parquet stage in full mode, else
-        ``localCheckpoint(eager=False)``, whose materialization rides the
-        first consuming action instead of a dedicated job."""
-        if self.reliable:
-            return self.stage(name, compute, upstream=upstream)
-        self._skipped_upstream[name] = upstream
-        return compute().localCheckpoint(eager=False)
 
     # ------------------------------------------------------------ metrics
 

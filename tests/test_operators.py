@@ -213,8 +213,13 @@ def test_verify_over_k_parity_at_production_k(spark):
     quickselect pull-back branch. jaccard_kmv/lb/ub equal kmv.jaccard, and
     the pull-back's sort is evaluated per row: no array_sort/array_union
     sits inside a lambda of the jaccard_kmv expression (one sort per
-    intersection element made a single over-k pair cost ~12 s)."""
-    from datasketches_spark.operators.verify import verify_pairs
+    intersection element made a single over-k pair cost ~12 s). The
+    grouped bucket pass's NumPy estimate equals it too."""
+    from datasketches_spark.operators import lsh
+    from datasketches_spark.operators.verify import (
+        verify_pairs,
+        verify_star_edges_with_fallback,
+    )
 
     cfg = DedupConfig(jaccard_threshold=0.5)
     assert cfg.k == 4096
@@ -237,8 +242,68 @@ def test_verify_over_k_parity_at_production_k(spark):
     (row,) = out.collect()
     assert (row["jaccard_kmv"], row["jaccard_lb"], row["jaccard_ub"]) == (est, lb, ub)
 
+    # the grouped bucket pass computes the same statistic in NumPy
+    bands = spark.createDataFrame([(0, 0, 42), (1, 0, 42)], "doc_id LONG, band INT, bhash LONG")
+    (g,) = verify_star_edges_with_fallback(bands, lsh.bucket_stats(bands), sig, cfg).collect()
+    assert g["jaccard_kmv"] == est
+    assert kmv.jaccard_estimate(sk[0].entries, sk[0].theta, sk[1].entries, sk[1].theta,
+                                cfg.k)[0] == est
+
     plan = out._jdf.queryExecution().analyzed()
     proj = plan.projectList()
     (kmv_expr,) = [proj.apply(i) for i in range(proj.size())
                    if proj.apply(i).name() == "jaccard_kmv"]
     assert _lambda_nested(kmv_expr, {"ArraySort", "ArrayUnion"}) == []
+
+
+def _bucket_sigs(spark, entries_by_id: dict[int, list[int]]):
+    rows = [(i, [0] * CFG.num_perm, sorted(e), kmv.MAX_THETA_LONG)
+            for i, e in entries_by_id.items()]
+    return spark.createDataFrame(
+        rows, "doc_id LONG, minhash ARRAY<LONG>, kmv_entries ARRAY<LONG>, kmv_theta LONG")
+
+
+_SHARED = list(range(1000, 1095))
+# rep 1 is an LSH false positive, disjoint from 2 and 3; (2, 3) is a true
+# pair (J = 95/105)
+_FP_REP = {1: list(range(1, 101)), 2: _SHARED + [2001, 2002, 2003, 2004, 2005],
+           3: _SHARED + [3001, 3002, 3003, 3004, 3005]}
+# every member shares 100 hashes (J = 100/102 for every pair)
+_ALL_PASS = {i: list(range(1000, 1100)) + [1000 * i + 201] for i in (1, 2, 3)}
+
+
+@pytest.mark.parametrize("sigs, n_bands, broadcast, expected", [
+    pytest.param(_FP_REP, 1, True, {(2, 3)}, id="fp_rep"),
+    pytest.param(_FP_REP, 1, False, {(2, 3)}, id="fp_rep_shuffle"),
+    pytest.param(_ALL_PASS, 1, True, {(1, 2), (1, 3)}, id="all_pass"),
+    pytest.param(_FP_REP, 2, True, {(2, 3)}, id="same_set_two_bands"),
+])
+def test_bucket_verify_false_positive_rep(spark, sigs, n_bands, broadcast, expected):
+    """One bucket {1, 2, 3}, rep = 1. Star edges alone lose the true pair
+    (2, 3) behind a false-positive rep: a failed star edge makes the bucket
+    verify all its pairs. A bucket whose star edges all pass yields only
+    them. The same member set in two bands yields each pair once. Values
+    equal ``verify_pairs``' SQL columns, and the caller's job label
+    survives the call."""
+    from datasketches_spark.operators import lsh, verify
+
+    sig = _bucket_sigs(spark, sigs)
+    bands = spark.createDataFrame(
+        [(i, b, 42) for b in range(n_bands) for i in (1, 2, 3)],
+        "doc_id LONG, band INT, bhash LONG")
+    sc = spark.sparkContext
+    sc.setJobDescription("probe:bucket_verify")
+    try:
+        out = verify.verify_star_edges_with_fallback(
+            bands, lsh.bucket_stats(bands), sig, CFG, broadcast_eligible=broadcast)
+        rows = out.collect()
+        assert sc.getLocalProperty("spark.job.description") == "probe:bucket_verify"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    got = [(r["id_a"], r["id_b"]) for r in rows]
+    assert sorted(got) == sorted(expected)
+    pairs = spark.createDataFrame(got, "id_a LONG, id_b LONG")
+    sql = {(r["id_a"], r["id_b"]): (r["jaccard_kmv"], r["jaccard_minhash"])
+           for r in verify.verify_pairs(pairs, sig, CFG).collect()}
+    assert {(r["id_a"], r["id_b"]): (r["jaccard_kmv"], r["jaccard_minhash"])
+            for r in rows} == sql

@@ -167,3 +167,23 @@ def test_light_conf_window_is_per_session(spark):
     assert (s2.conf.get("spark.sql.adaptive.enabled"),
             s2.conf.get("spark.sql.shuffle.partitions")) == prev[s2]
     assert _LIGHT_CONF_STATE == {}
+
+
+def test_run_dedup_restores_caller_job_label(spark):
+    """Stages label their jobs (``stage:<name>``); run_dedup must hand the
+    caller's label back on return and on error, so jobs the caller runs on
+    the returned tables are not attributed to the last stage."""
+    from pyspark.errors import AnalysisException
+
+    sc = spark.sparkContext
+    docs = generate_corpus(spark, 200, seed=5)
+    sc.setJobDescription("caller:probe")
+    try:
+        res = run_dedup(spark, docs, CFG, light_stages=True)
+        assert sc.getLocalProperty("spark.job.description") == "caller:probe"
+        assert res.clusters.count() == 200
+        with pytest.raises(AnalysisException):  # docs_meta selects repo
+            run_dedup(spark, docs.drop("repo"), CFG, light_stages=True)
+        assert sc.getLocalProperty("spark.job.description") == "caller:probe"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)

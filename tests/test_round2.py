@@ -23,38 +23,6 @@ CFG = DedupConfig()
 
 # ------------------------------------------------- star-edge fallback
 
-def _sig_df(spark, entries_by_id: dict[int, list[int]]):
-    rows = [
-        (i, [0] * CFG.num_perm, sorted(e), kmv.MAX_THETA_LONG)
-        for i, e in entries_by_id.items()
-    ]
-    return spark.createDataFrame(
-        rows, "doc_id LONG, minhash ARRAY<LONG>, kmv_entries ARRAY<LONG>, kmv_theta LONG"
-    )
-
-
-def test_star_edge_fallback_recovers_pair_behind_false_positive_rep(spark):
-    """Bucket {1, 2, 3} where rep=1 is an LSH false positive (disjoint from
-    both members) but (2, 3) is a true pair: star edges alone lose (2, 3);
-    the per-bucket fallback must recover it."""
-    from datasketches_spark.operators import lsh, verify
-
-    shared = list(range(1000, 1095))  # 95 shared hashes
-    sig = _sig_df(spark, {
-        1: list(range(1, 101)),            # rep: disjoint from 2 and 3
-        2: shared + [2001, 2002, 2003, 2004, 2005],
-        3: shared + [3001, 3002, 3003, 3004, 3005],
-    })
-    bands = spark.createDataFrame(
-        [(1, 0, 42), (2, 0, 42), (3, 0, 42)], "doc_id LONG, band INT, bhash LONG"
-    )
-    stats = lsh.bucket_stats(bands)
-    out = verify.verify_star_edges_with_fallback(bands, stats, sig, CFG)
-    pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    assert (2, 3) in pairs
-    assert (1, 2) not in pairs and (1, 3) not in pairs
-
-
 def test_star_edges_alone_would_miss_that_pair(spark):
     """Negative control: the pre-fallback candidate edges (rep→member only)
     cannot contain (2, 3) — documents why the fallback exists."""

@@ -318,7 +318,7 @@ def test_cc_converges_on_chain_with_tight_iteration_budget(spark):
                         6: True, 7: True}, outcomes
 
 
-# ------------------------------- store-routed verify + broadcast guard
+# ------------------------------------------- checkpointed verify stage
 
 def _mini_corpus(spark, n=400):
     from datasketches_spark.sources.corpus import generate_corpus
@@ -327,6 +327,9 @@ def _mini_corpus(spark, n=400):
 
 
 def test_pipeline_checkpoints_verify_substages(spark, tmp_path):
+    """Full mode checkpoints verified_edges as one stage, with no verify
+    sub-stage tables; deleting its manifest recomputes it from the resumed
+    signatures, bands and bucket_stats, with identical outputs."""
     from datasketches_spark.pipeline import run_dedup
 
     docs = _mini_corpus(spark)
@@ -334,51 +337,25 @@ def test_pipeline_checkpoints_verify_substages(spark, tmp_path):
     docs.write.mode("overwrite").parquet(path)
     docs = spark.read.parquet(path)
     root = str(tmp_path / "ckpt")
-    res = run_dedup(spark, docs, CFG, checkpoint_dir=root)
-    res.dup_pairs.count()
-    # verify-internal materializations are resumable checkpoint sub-stages
-    assert os.path.exists(os.path.join(root, "star_verified", "manifest.json"))
-    assert os.path.exists(os.path.join(root, "bad_buckets", "manifest.json"))
-    # delete the verified_edges manifest: recompute must RESUME star_verified
+
+    def outputs(res):
+        return (sorted(tuple(r) for r in res.dup_pairs.collect()),
+                sorted(tuple(r) for r in res.clusters.collect()))
+
+    first = outputs(run_dedup(spark, docs, CFG, checkpoint_dir=root))
+    assert first[0]
+    assert os.path.isfile(os.path.join(root, "verified_edges", "manifest.json"))
+    for sub in ("bucket_membership", "participant_sigs", "star_verified",
+                "bad_buckets", "fallback_pairs"):
+        assert not os.path.exists(os.path.join(root, sub)), sub
     os.remove(os.path.join(root, "verified_edges", "manifest.json"))
-    res2 = run_dedup(spark, docs, CFG, checkpoint_dir=root)
-    res2.dup_pairs.count()
+    second = outputs(run_dedup(spark, docs, CFG, checkpoint_dir=root))
     with open(os.path.join(root, "metrics.json")) as f:
         lineage = {e["stage"]: e for e in json.load(f)["lineage"]}
-    assert lineage["star_verified"]["resumed"], lineage
+    for up in ("signatures", "bands", "bucket_stats"):
+        assert lineage[up]["resumed"], lineage
     assert not lineage["verified_edges"]["resumed"], lineage
-
-
-def test_verify_fallback_shuffle_join_when_broadcast_disallowed(spark):
-    # same planted scenario as the round-2 fallback test, but with the
-    # bad-bucket broadcast guard forced to "too big": results must be
-    # identical through the shuffle-join path
-    from datasketches_spark.operators import lsh, verify
-
-    cfg = DedupConfig(jaccard_threshold=0.5)
-    common = list(range(1000, 1080))
-    sigs = {
-        1: list(range(2000, 2080)),  # false-positive rep: disjoint
-        2: common + [1, 2, 3],
-        3: common + [4, 5, 6],
-    }
-    rows = [
-        (i, [0] * cfg.num_perm, sorted(e), kmv.MAX_THETA_LONG)
-        for i, e in sigs.items()
-    ]
-    sig = spark.createDataFrame(
-        rows, "doc_id LONG, minhash ARRAY<LONG>, kmv_entries ARRAY<LONG>, kmv_theta LONG"
-    )
-    bands = spark.createDataFrame(
-        [(1, 0, 42), (2, 0, 42), (3, 0, 42)], "doc_id LONG, band INT, bhash LONG"
-    )
-    stats = lsh.bucket_stats(bands)
-    got_bcast = verify.verify_star_edges_with_fallback(bands, stats, sig, cfg)
-    got_shuffle = verify.verify_star_edges_with_fallback(
-        bands, stats, sig, cfg, bad_bucket_broadcast_max_bytes=0)
-    pairs_b = {(r["id_a"], r["id_b"]) for r in got_bcast.collect()}
-    pairs_s = {(r["id_a"], r["id_b"]) for r in got_shuffle.collect()}
-    assert pairs_b == pairs_s == {(2, 3)}
+    assert second == first
 
 
 # --------------------------------------- checkpoint fingerprint hardening

@@ -1,6 +1,6 @@
 """Round-5 additions: trimmed Jaccard point estimate, loud non-string
-token failure, full-coverage POSIX input fingerprint, fallback-pair
-materialization gating, light-stages checkpoint mode."""
+token failure, full-coverage POSIX input fingerprint, light-stages
+checkpoint mode."""
 
 import json
 import os
@@ -36,9 +36,14 @@ def test_hash_tokens_batch_rejects_non_string_token():
 # --------------------------------- trimmed Jaccard point estimate corner
 
 def test_jaccard_kmv_both_empty_is_one(spark):
-    """kmv.jaccard's corner: J(∅, ∅) = 1 — the column estimate must agree
-    (it previously returned 0 for the empty-union case)."""
-    from datasketches_spark.operators.verify import verify_pairs
+    """kmv.jaccard's corner: J(∅, ∅) = 1 — the column estimate and the
+    grouped bucket pass must agree (the column once returned 0 for the
+    empty-union case)."""
+    from datasketches_spark.operators import lsh
+    from datasketches_spark.operators.verify import (
+        verify_pairs,
+        verify_star_edges_with_fallback,
+    )
 
     sig = spark.createDataFrame(
         [(0, [0] * CFG.num_perm, [], kmv.MAX_THETA_LONG),
@@ -49,6 +54,9 @@ def test_jaccard_kmv_both_empty_is_one(spark):
                      with_bounds=True).collect()[0]
     lb, est, ub = kmv.jaccard(kmv.empty_sketch(), kmv.empty_sketch(), k=CFG.k)
     assert (r["jaccard_kmv"], r["jaccard_lb"], r["jaccard_ub"]) == (est, lb, ub) == (1.0, 1.0, 1.0)
+    bands = spark.createDataFrame([(0, 0, 42), (1, 0, 42)], "doc_id LONG, band INT, bhash LONG")
+    (g,) = verify_star_edges_with_fallback(bands, lsh.bucket_stats(bands), sig, CFG).collect()
+    assert (g["id_a"], g["id_b"], g["jaccard_kmv"]) == (0, 1, est)
 
 
 # ------------------------- full-coverage POSIX fingerprint (no sample hole)
@@ -83,68 +91,6 @@ def test_fingerprint_stable_without_changes(spark, tmp_path):
     fp1 = input_fingerprint(spark.read.parquet(path))
     fp2 = input_fingerprint(spark.read.parquet(path))
     assert fp1 == fp2 and fp1 is not None
-
-
-# ----------------------- fallback-pair materialization gating (ADVICE r4)
-
-def test_fallback_materialization_gate_same_result(spark, monkeypatch):
-    """Forcing fallback-pair materialization (threshold 0) must not change
-    the verified output on the planted false-positive-rep scenario. The
-    membership count job must not overwrite the caller's job label."""
-    from datasketches_spark.operators import lsh, verify
-
-    shared = list(range(1000, 1095))
-    rows = [
-        (1, [0] * CFG.num_perm, sorted(range(1, 101)), kmv.MAX_THETA_LONG),
-        (2, [0] * CFG.num_perm, sorted(shared + [2001, 2002, 2003, 2004, 2005]), kmv.MAX_THETA_LONG),
-        (3, [0] * CFG.num_perm, sorted(shared + [3001, 3002, 3003, 3004, 3005]), kmv.MAX_THETA_LONG),
-    ]
-    sig = spark.createDataFrame(
-        rows, "doc_id LONG, minhash ARRAY<LONG>, kmv_entries ARRAY<LONG>, kmv_theta LONG")
-    bands = spark.createDataFrame(
-        [(1, 0, 42), (2, 0, 42), (3, 0, 42)], "doc_id LONG, band INT, bhash LONG")
-    stats = lsh.bucket_stats(bands)
-    sc = spark.sparkContext
-    sc.setJobDescription("probe:fallback_gate")
-    try:
-        out = verify.verify_star_edges_with_fallback(bands, stats, sig, CFG)
-        assert sc.getLocalProperty("spark.job.description") == "probe:fallback_gate"
-    finally:
-        sc.setLocalProperty("spark.job.description", None)
-    base = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    monkeypatch.setenv("DSS_FB_MATERIALIZE_BAD", "0")
-    forced = {(r["id_a"], r["id_b"])
-              for r in verify.verify_star_edges_with_fallback(bands, stats, sig, CFG).collect()}
-    assert base == forced == {(2, 3)}
-
-
-def test_fallback_short_circuit_when_no_bad_buckets(spark):
-    """When every star edge passes verification there are zero bad buckets
-    and the whole fallback subtree (re-scan, self-join, anti-join, second
-    verify pass) is provably empty — the function must return the passed
-    star edges directly, with no anti-join in the plan, and the pair set
-    must still be complete."""
-    from datasketches_spark.operators import lsh, verify
-
-    shared = list(range(1000, 1100))
-    rows = [
-        (1, [0] * CFG.num_perm, sorted(shared + [1201]), kmv.MAX_THETA_LONG),
-        (2, [0] * CFG.num_perm, sorted(shared + [2201]), kmv.MAX_THETA_LONG),
-        (3, [0] * CFG.num_perm, sorted(shared + [3201]), kmv.MAX_THETA_LONG),
-    ]
-    sig = spark.createDataFrame(
-        rows, "doc_id LONG, minhash ARRAY<LONG>, kmv_entries ARRAY<LONG>, kmv_theta LONG")
-    bands = spark.createDataFrame(
-        [(1, 0, 42), (2, 0, 42), (3, 0, 42)], "doc_id LONG, band INT, bhash LONG")
-    stats = lsh.bucket_stats(bands)
-    out = verify.verify_star_edges_with_fallback(bands, stats, sig, CFG)
-    # star edges are rep->member: the rep (min doc_id = 1) pairs with 2, 3.
-    got = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    assert got == {(1, 2), (1, 3)}
-    # the short-circuit returns the passed-filter subtree: no fallback
-    # anti-join may appear in the optimized plan
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftAnti" not in plan, plan
 
 
 # ------------------------------------------ light-stages checkpoint mode
@@ -277,12 +223,11 @@ def test_media_near_dups_fake_codec_path(spark):
 
 def test_light_mode_job_count_bounded(spark, tmp_path):
     """The light-stages fixed floor is (jobs x per-job scheduler latency);
-    round 5 holds the full pipeline at ~16-21 jobs. Pin a ceiling via a
-    job group so a regression back toward the 79-job AQE-per-query-stage
-    regime (or a new accidental count/materialization action) fails
-    loudly. The bound is deliberately loose: job count varies a little
-    with corpus content (fallback buckets, broadcast builds), never by
-    tens."""
+    the pipeline plus the count below runs 11 jobs here (20 before the
+    grouped bucket verify). Pin a ceiling via a job group so a regression
+    back toward the 79-job AQE-per-query-stage regime (or a new
+    accidental count/materialization action) fails loudly. The ceiling
+    is the measured count + 3."""
     from datasketches_spark.pipeline import run_dedup
     from datasketches_spark.sources.corpus import generate_corpus
 
@@ -298,9 +243,8 @@ def test_light_mode_job_count_bounded(spark, tmp_path):
     finally:
         sc.setJobGroup("", "")
     jobs = sc.statusTracker().getJobIdsForGroup("light_job_count")
-    # the terminal clusters.count() above is included; 25 is ~2x headroom
-    # over the measured count and ~3x under the pre-light-mode regime
-    assert 0 < len(jobs) <= 25, f"light-mode pipeline ran {len(jobs)} jobs"
+    # the terminal clusters.count() above is included
+    assert 0 < len(jobs) <= 14, f"light-mode pipeline ran {len(jobs)} jobs"
     # the signature stage ran one task per core: one part file each
     ck = tmp_path / "ck" / "signatures"
     data_dir = json.loads((ck / "manifest.json").read_text())["data_dir"]
@@ -344,47 +288,3 @@ def test_run_dedup_light_restores_session_conf(spark):
     n_cores = spark.sparkContext.defaultParallelism
     assert res.signatures.rdd.getNumPartitions() == n_cores
     assert res.metrics["decisions"]["sig_tasks"] == n_cores
-
-
-# ----------------- shared participant-signature subtree (round-5 session 2)
-
-def test_participant_sig_gate_on_off_same_result(spark):
-    """The verify chain optionally materializes the participant-filtered
-    signature table once and runs BOTH verify passes (star + fallback)
-    against it — gated on the membership count clearing the broadcast
-    budget. Gate ON (n_memb hint small) and gate OFF (hint over the 4M
-    budget) must produce identical verified pairs on the planted
-    false-positive-representative scenario, where the fallback subtree is
-    exercised end to end."""
-    from datasketches_spark.operators import lsh, verify
-
-    shared = list(range(1000, 1095))
-    rows = [
-        (1, [0] * CFG.num_perm, sorted(range(1, 101)), kmv.MAX_THETA_LONG),
-        (2, [0] * CFG.num_perm, sorted(shared + [2001, 2002, 2003, 2004, 2005]), kmv.MAX_THETA_LONG),
-        (3, [0] * CFG.num_perm, sorted(shared + [3001, 3002, 3003, 3004, 3005]), kmv.MAX_THETA_LONG),
-    ]
-    sig = spark.createDataFrame(
-        rows, "doc_id LONG, minhash ARRAY<LONG>, kmv_entries ARRAY<LONG>, kmv_theta LONG")
-    bands = spark.createDataFrame(
-        [(1, 0, 42), (2, 0, 42), (3, 0, 42)], "doc_id LONG, band INT, bhash LONG")
-    stats = lsh.bucket_stats(bands)
-    on = {(r["id_a"], r["id_b"])
-          for r in verify.verify_star_edges_with_fallback(
-              bands, stats, sig, CFG, n_memb_hint=3).collect()}
-    off = {(r["id_a"], r["id_b"])
-           for r in verify.verify_star_edges_with_fallback(
-               bands, stats, sig, CFG, n_memb_hint=10_000_000).collect()}
-    assert on == off == {(2, 3)}
-
-
-def test_fallback_hint_bounded_by_membership():
-    """The fallback verify's participant hint must be the TIGHTER of
-    n_bad x bucket_cap and the eligible-membership count: the cap-based
-    bound alone overshoots the broadcast gate ~50x on real bucket-size
-    distributions and silently disabled the semi-filter (a full-width
-    signature shuffle at 1M files). Whitebox: with a small n_memb the
-    effective hint must clear the 4M gate even when n_bad x cap does not."""
-    n_bad, cap, n_memb = 20_000, 256, 950_000
-    assert n_bad * cap > 4_000_000          # cap bound alone: gate OFF
-    assert min(n_bad * cap, n_memb) <= 4_000_000  # tighter bound: gate ON

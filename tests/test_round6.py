@@ -179,8 +179,8 @@ def _adversarial_corpus(spark):
 def test_adversarial_corpus_is_actually_adversarial(spark):
     """Regime pin for the e2e test below: the corpus must produce MANY
     failed-rep buckets (measured 16 bad buckets / 167 failed star edges
-    when written) — otherwise the zero-bad short-circuit would skip the
-    very branch the e2e test claims to cover."""
+    when written) — otherwise no bucket would take the all-pairs branch
+    the e2e test claims to cover."""
     from datasketches_spark.operators import lsh, verify
     from datasketches_spark.operators.signatures import build_signatures
 
@@ -204,19 +204,15 @@ def test_adversarial_corpus_is_actually_adversarial(spark):
 
 
 @pytest.mark.parametrize("with_store", [False, True])
-def test_fallback_heavy_regime_e2e(spark, tmp_path_factory, monkeypatch, with_store):
+def test_fallback_heavy_regime_e2e(spark, tmp_path_factory, with_store):
     """VERDICT r5 item 4: the adversarial (many-failed-reps) fallback
-    branch exercised through the FULL pipeline — materialized fb_pairs,
-    the distributed n_bad count (local collect cap forced below the real
-    bad-bucket count) and the cap^2-bounded self-join — in both store and
+    branch exercised through the FULL pipeline — many buckets with a
+    failed star edge, each verifying all of its pairs — in both store and
     store-less modes. Planted near-dups must still cluster; boilerplate-
     only pairs must NOT merge."""
     from datasketches_spark.pipeline import run_dedup
 
     corpus = _adversarial_corpus(spark)
-    # the low cap forces the adversarial branch: fb_pairs materialization
-    # and the distributed bad-bucket count instead of the bounded collect
-    monkeypatch.setenv("DSS_FB_MATERIALIZE_BAD", "1")
     cfg = DedupConfig()
     ckpt = (str(tmp_path_factory.mktemp("adv_ckpt")) if with_store else None)
     res = run_dedup(spark, corpus, cfg, checkpoint_dir=ckpt,
