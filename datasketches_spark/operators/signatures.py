@@ -234,7 +234,9 @@ def kmv_distinct_by_group(df: DataFrame, group_col: str, value_col: str,
         T.StructField(out_col, T.LongType(), False),
     ])
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: PySpark infers applyInPandas' eval type from complete
+    # hints and warns on partial ones
+    def final(key, pdf):
         sketches = [
             kmv.ThetaSketch(int(t), np.asarray(e, dtype=np.int64).view(np.uint64),
                             empty=(len(e) == 0 and int(t) == kmv.MAX_THETA_LONG), seed=seed)
@@ -302,7 +304,7 @@ def merge_kmv_sketches(sig: DataFrame, group_cols: list[str], cfg: DedupConfig,
         ]
     )
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key, pdf):  # no hints, as on ``final`` above
         # theta is always < 2^63 so the signed int64 column needs no
         # reinterpretation; entries re-view their bits as uint64.
         sketches = [

@@ -12,7 +12,8 @@ Stage graph (every stage is a resumable checkpoint, SURVEY §7 stage 1):
     ├─ verified edges: per distinct bucket member set, star edges from
     │    its min id, all pairs if one fails    [one grouped pandas pass]
     ├─ all edges = exact ∪ (verified mapped through content reps)
-    ├─ clusters: large-star/small-star CC      [iterative, checkpointed]
+    ├─ clusters: CC on the driver (NumPy) when the edges fit the
+    │    broadcast budget, else large-star/small-star rounds
     └─ dup_pairs + cluster assignments + metrics/lineage
 
 Near-dup detection runs on *distinct content* only (exact duplicates are
@@ -26,12 +27,14 @@ import threading
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datasketches_spark.config import DedupConfig
 from datasketches_spark.operators import exact_dedup, lsh, spans, verify
-from datasketches_spark.operators.connected_components import connected_components
+from datasketches_spark.operators.connected_components import (
+    connected_components, connected_components_local)
 from datasketches_spark.operators.signatures import build_signatures
 from datasketches_spark.plans.checkpoints import CheckpointStore, input_fingerprint
 from datasketches_spark.session import core_tasks
@@ -176,12 +179,15 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # checkpoints — a fully-resumed run must not pay a corpus scan)
         from concurrent.futures import ThreadPoolExecutor as _TPE
 
-        def _warm_exact() -> None:
+        # the count sizes the clusters stage's choice of solver
+        def _warm_exact() -> int:
             spark.sparkContext.setJobDescription("stage:prewarm_exact")
-            exact_edges.count()
+            return exact_edges.count()
 
         _warm_pool = _TPE(max_workers=1)
-        prewarm = _warm_pool.submit(_warm_exact)
+        # worker threads carry the caller's job group and properties, so
+        # sc.cancelJobGroup reaches their jobs too
+        prewarm = _warm_pool.submit(inheritable_thread_target(spark)(_warm_exact))
         _warm_pool.shutdown(wait=False)
 
     n_tasks = core_tasks(spark.sparkContext)
@@ -334,7 +340,8 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         spark.conf.set("spark.sql.shuffle.partitions", str(p_post))
     # data-derived sizing and broadcast choices (None: not made in this mode)
     decisions = dict(sig_tasks=n_tasks if light_stages else None, p_small=p_small,
-                     p_post=p_post, bcast_eligible=bcast_eligible, n_memb=n_memb)
+                     p_post=p_post, bcast_eligible=bcast_eligible, n_memb=n_memb,
+                     n_edges=None, cc_local=None)
 
     dropped = stats.filter(F.col("bucket_size") > cfg.bucket_cap)
     verified = store.stage(
@@ -348,11 +355,12 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         cache=True,
     )
 
+    n_exact = None
     if prewarm is not None:
         # by now the signature + verify stages have run; the prewarm is
         # long done in the common case. Await it regardless: the consumers
         # below must see WARM caches or the cold-cache race comes back.
-        prewarm.result()
+        n_exact = prewarm.result()
 
     # dup_pairs depends only on verified + exact edges — NOT on the CC
     # chain — so its write job can run concurrently with the cluster
@@ -375,14 +383,15 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         from concurrent.futures import ThreadPoolExecutor
         _dup_pool = ThreadPoolExecutor(max_workers=1)
         dup_fut = _dup_pool.submit(
-            store.stage, "dup_pairs",
+            inheritable_thread_target(spark)(store.stage), "dup_pairs",
             lambda: _expand_pairs(verified, exact_edges, None),
             upstream=["verified_edges", "exact_groups"],
         )
         _dup_pool.shutdown(wait=False)
     try:
         return _finish_dedup(spark, store, cfg, collect_metrics, hashed, reps, sig,
-                             exact_edges, verified, dup_fut, dropped, decisions)
+                             exact_edges, verified, dup_fut, dropped, decisions,
+                             n_exact)
     except BaseException:
         # if the CC chain raises, the in-flight write must still be awaited
         # before the error propagates — never leave a daemon thread writing
@@ -395,7 +404,7 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
 
 def _finish_dedup(spark, store, cfg, collect_metrics, hashed, reps, sig,
                   exact_edges, verified, dup_fut, dropped,
-                  decisions) -> DedupResult:
+                  decisions, n_exact) -> DedupResult:
     """Clustering, span pass, pair assembly and metrics — the tail of
     ``_run_dedup_impl``, split out so the concurrent dup_pairs write can be
     awaited on the error path without a try block spanning 100 lines."""
@@ -404,16 +413,9 @@ def _finish_dedup(spark, store, cfg, collect_metrics, hashed, reps, sig,
         .unionByName(exact_edges)
     )
 
-    if store.reliable:
-        # full mode: CC rounds truncate lineage through RELIABLE checkpoints
-        # under the store root — executor-local blocks die with their
-        # executor (job failure, not recompute) under preemption
-        import os as _os
-        spark.sparkContext.setCheckpointDir(
-            _os.path.join(store.root, "_spark_checkpoints"))
     clusters_nontrivial = store.stage(
         "clusters",
-        lambda: connected_components(all_edges, reliable=store.reliable),
+        lambda: _clusters(spark, store, all_edges, n_exact, decisions),
         upstream=["verified_edges", "exact_groups"],
     )
     # the deliverable per-doc assignment table (singletons included) is
@@ -495,6 +497,40 @@ def _finish_dedup(spark, store, cfg, collect_metrics, hashed, reps, sig,
         metrics=metrics,
         span_pairs=span_verified,
     )
+
+
+def _clusters(spark, store, all_edges: DataFrame, n_exact: int | None,
+              decisions: dict) -> DataFrame:
+    """Connected components of the run's edges, solved on the driver when
+    the edge list (16 B per (src, dst) row) fits the broadcast budget that
+    ``bcast_eligible`` also gates on, else by star rounds. The edge count
+    comes from counts the run already has: the ``verified_edges``
+    manifest, plus the prewarm's exact-edge count (light) or docs_meta
+    rows minus signature rows (full: every document that is not its
+    content's representative has one exact edge; an upper bound when
+    several documents have null content). Store-less, one count over the
+    two persisted edge caches, which the solve then reads."""
+    n_verified = store.n_rows("verified_edges")
+    if n_exact is None:
+        n_docs, n_sig = store.n_rows("docs_meta"), store.n_rows("signatures")
+        if n_docs is not None and n_sig is not None:
+            n_exact = n_docs - n_sig
+    if n_verified is None or n_exact is None:
+        n_edges = store.n_rows("all_edges", all_edges)
+    else:
+        n_edges = n_verified + n_exact
+    cc_local = n_edges * 16 < verify.BROADCAST_BUDGET_BYTES
+    decisions.update(n_edges=n_edges, cc_local=cc_local)
+    if cc_local:
+        return connected_components_local(all_edges)
+    if store.reliable:
+        # full mode: CC rounds truncate lineage through RELIABLE checkpoints
+        # under the store root — executor-local blocks die with their
+        # executor (job failure, not recompute) under preemption
+        import os as _os
+        spark.sparkContext.setCheckpointDir(
+            _os.path.join(store.root, "_spark_checkpoints"))
+    return connected_components(all_edges, reliable=store.reliable)
 
 
 def _expand_pairs(verified: DataFrame, exact_edges: DataFrame,

@@ -134,7 +134,10 @@ class CheckpointStore:
     CC rounds           checkpoint   localCheckpoint     localCheckpoint
     ==================  ===========  ==================  ===================
 
-    Only full mode survives executor loss: ``localCheckpoint`` blocks live
+    CC rounds run only for edge lists above the broadcast budget; smaller
+    graphs are solved on the driver in every mode, with no executor state
+    (``pipeline._clusters``). Above it only full mode survives executor
+    loss: ``localCheckpoint`` blocks live
     on the executor that computed them and fail the job when it dies. The
     light modes trade that, and cheap-stage resumability, for the fixed
     cost of a parquet stage (write job + manifest PUT + read-back

@@ -3,6 +3,7 @@ union vs exact, ANN top-k sanity, multimodal plumbing, streaming dedup."""
 
 import os
 import time
+import warnings
 
 import numpy as np
 import pytest
@@ -88,7 +89,10 @@ def test_merge_kmv_matches_exact_distinct(spark):
         T.StructField("kmv_theta", T.LongType(), False),
     ])
     partials = li.select("l_returnflag", "l_suppkey").repartition(8).mapInPandas(to_sketch, schema)
-    merged = merge_kmv_sketches(partials, ["l_returnflag"], CFG)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        merged = merge_kmv_sketches(partials, ["l_returnflag"], CFG)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
     got = {r["l_returnflag"]: int(round(r["estimate"])) for r in merged.collect()}
     exp = {
         r["l_returnflag"]: r["n"]
@@ -307,3 +311,66 @@ def test_bucket_verify_false_positive_rep(spark, sigs, n_bands, broadcast, expec
            for r in verify.verify_pairs(pairs, sig, CFG).collect()}
     assert {(r["id_a"], r["id_b"]): (r["jaccard_kmv"], r["jaccard_minhash"])
             for r in rows} == sql
+
+
+# ------------------------------------------- connected components parity
+
+# disjoint id ranges, so one edge table holds every shape at once
+CC_GRAPHS = {
+    "chain64": [(i, i + 1) for i in range(63)],
+    "star": [(100, 100 + i) for i in range(1, 20)],
+    "cycle": [(200 + i, 200 + (i + 1) % 12) for i in range(12)],
+    "dup_and_reversed": [(303, 307), (307, 303), (303, 307), (309, 307), (307, 309)],
+    "self_loop": [(405, 405), (405, 406), (408, 408)],
+    "two_components": [(501, 502), (502, 503), (510, 511), (512, 511)],
+}
+
+
+CC_EDGES = [e for g in CC_GRAPHS.values() for e in g]
+CC_LABELS = {**{i: 0 for i in range(64)}, **{i: 100 for i in range(100, 120)},
+             **{i: 200 for i in range(200, 212)}, 303: 303, 307: 303, 309: 303,
+             405: 405, 406: 405, 501: 501, 502: 501, 503: 501,
+             510: 510, 511: 510, 512: 510}
+
+
+@pytest.mark.parametrize("id_type", ["INT", "LONG"])
+@pytest.mark.parametrize("rows, labels", [(CC_EDGES, CC_LABELS), ([], {})],
+                         ids=["graphs", "empty"])
+def test_cc_local_solve_equals_star_rounds(spark, id_type, rows, labels):
+    """The driver-side solve returns exactly the star rounds' rows and
+    schema, id type included: self-loop-only nodes absent, every other
+    node labelled with its component's minimum id."""
+    from datasketches_spark.operators.connected_components import (
+        connected_components, connected_components_local)
+
+    edges = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
+    local = connected_components_local(edges)
+    star = connected_components(edges)
+    assert local.schema == star.schema
+    assert local.schema["doc_id"].dataType == edges.schema["src"].dataType
+    assert local.schema["cluster_id"].dataType == edges.schema["src"].dataType
+    got = sorted(tuple(r) for r in local.collect())
+    assert got == sorted(tuple(r) for r in star.collect())
+    assert dict(got) == labels
+
+
+def test_cosine_topk_collected_rejects_non_integral_ids(spark):
+    """The matmul path emits LongType ids: non-integral id columns raise a
+    clear TypeError instead of crashing in NumPy or coercing '07' to 7;
+    the JVM path still serves them."""
+    from datasketches_spark.operators.ann import cosine_topk
+
+    vecs = [[1.0, 0.0], [0.0, 1.0]]
+    str_corpus = spark.createDataFrame(list(zip(["07", "x"], vecs)),
+                                       "vec_id STRING, embedding ARRAY<DOUBLE>")
+    int_corpus = spark.createDataFrame(list(zip([7, 8], vecs)),
+                                       "vec_id INT, embedding ARRAY<DOUBLE>")
+    str_q = spark.createDataFrame([("q", vecs[0])], "query_id STRING, embedding ARRAY<DOUBLE>")
+    long_q = spark.createDataFrame([(1, vecs[0])], "query_id LONG, embedding ARRAY<DOUBLE>")
+    with pytest.raises(TypeError, match="'vec_id' is string"):
+        cosine_topk(str_corpus, long_q, k=1, max_collected_queries=4)
+    with pytest.raises(TypeError, match="'query_id' is string"):
+        cosine_topk(int_corpus, str_q, k=1, max_collected_queries=4)
+    top = cosine_topk(int_corpus, long_q, k=1, max_collected_queries=4).collect()
+    assert [(r["query_id"], r["vec_id"]) for r in top] == [(1, 7)]
+    assert [r["vec_id"] for r in cosine_topk(str_corpus, long_q, k=1).collect()] == ["07"]

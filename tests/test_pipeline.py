@@ -187,3 +187,52 @@ def test_run_dedup_restores_caller_job_label(spark):
         assert sc.getLocalProperty("spark.job.description") == "caller:probe"
     finally:
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_run_dedup_worker_threads_join_caller_job_group(spark, tmp_path):
+    """The prewarm and dup_pairs threads carry the caller's job group, so
+    ``sc.cancelJobGroup`` reaches every job of a run: none lands outside
+    the group (two did before the threads inherited it)."""
+    sc = spark.sparkContext
+    cpath = str(tmp_path / "corpus")
+    generate_corpus(spark, 400, seed=11).write.parquet(cpath)
+    corpus = spark.read.parquet(cpath)
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("caller_group", "job-group probe")
+    try:
+        run_dedup(spark, corpus, CFG, checkpoint_dir=str(tmp_path / "ck"),
+                  light_stages=True)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert tracker.getJobIdsForGroup("caller_group")
+
+
+def test_cc_star_rounds_equal_local_solve(spark, tmp_path, monkeypatch):
+    """A zero broadcast budget forces the star rounds; they must give the
+    same dup_pairs and clusters as the driver-side solve the default run
+    picks, and each run records its choice."""
+    from datasketches_spark.operators import verify
+
+    cpath = str(tmp_path / "corpus")
+    generate_corpus(spark, 400, seed=7).write.parquet(cpath)
+    corpus = spark.read.parquet(cpath)
+
+    def run(name):
+        res = run_dedup(spark, corpus, CFG, checkpoint_dir=str(tmp_path / name),
+                        light_stages=True)
+        pairs = sorted((r["id_a"], r["id_b"], r["kind"]) for r in res.dup_pairs.collect())
+        clusters = sorted((r["doc_id"], r["cluster_id"]) for r in res.clusters.collect())
+        return res.metrics["decisions"], pairs, clusters
+
+    d_local, pairs_local, clusters_local = run("local")
+    monkeypatch.setattr(verify, "BROADCAST_BUDGET_BYTES", 0)
+    d_star, pairs_star, clusters_star = run("star")
+    assert d_local["cc_local"] is True and d_star["cc_local"] is False
+    assert d_local["n_edges"] == d_star["n_edges"] > 0
+    assert pairs_local == pairs_star and len(pairs_local) > 0
+    assert clusters_local == clusters_star
+    assert len({c for _, c in clusters_local}) < len(clusters_local)

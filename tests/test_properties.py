@@ -10,6 +10,7 @@ from hypothesis import strategies as st
 from datasketches_spark.config import MAX_THETA_LONG
 from datasketches_spark.kernels import kmv, minhash, shingles
 from datasketches_spark.kernels.murmur3 import hash128, sketch_hash_longs_vec
+from datasketches_spark.operators.connected_components import component_labels
 from tests.reference_murmur3 import murmur3_x64_128
 
 K = 64  # small k so estimation mode is exercised by modest inputs
@@ -106,3 +107,34 @@ def test_shingle_pipeline_total(text):
     a = shingles.shingle_set(text, 5)
     b = shingles.shingle_set(text, 5)
     assert np.array_equal(a, b)
+
+
+def _bfs_labels(edges: list[tuple[int, int]]) -> dict[int, int]:
+    adj: dict[int, set[int]] = {}
+    for u, v in edges:
+        if u != v:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+    labels: dict[int, int] = {}
+    for root in sorted(adj):  # the first unseen node is its component's minimum
+        if root in labels:
+            continue
+        labels[root] = root
+        frontier = [root]
+        while frontier:
+            for w in adj[frontier.pop()]:
+                if w not in labels:
+                    labels[w] = root
+                    frontier.append(w)
+    return labels
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.tuples(st.integers(-40, 40), st.integers(-40, 40)), max_size=120),
+       st.sampled_from([np.int32, np.int64]))
+def test_component_labels_match_bfs(edges, dtype):
+    src = np.array([u for u, _ in edges], dtype=dtype)
+    dst = np.array([v for _, v in edges], dtype=dtype)
+    nodes, labels = component_labels(src, dst)
+    assert nodes.dtype == labels.dtype == dtype
+    assert dict(zip(nodes.tolist(), labels.tolist())) == _bfs_labels(edges)

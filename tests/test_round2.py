@@ -6,6 +6,7 @@ group aggregation, LSH-bucketed embedding near-dups."""
 import json
 import os
 import struct
+import warnings
 
 import numpy as np
 import pytest
@@ -307,7 +308,11 @@ def test_kmv_distinct_by_group_two_phase_plan_and_values(spark):
     from datasketches_spark.operators.signatures import kmv_distinct_by_group
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    out = kmv_distinct_by_group(li, "l_returnflag", "l_suppkey", CFG)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = kmv_distinct_by_group(li, "l_returnflag", "l_suppkey", CFG)
+    # the grouped function's hints must not leave PySpark guessing
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     # the grouped merge must sit ABOVE the partial stage in the plan tree
