@@ -56,11 +56,12 @@ def run_dedup(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
               collect_metrics: bool = False,
               light_stages: bool = False) -> DedupResult:
     """See ``_run_dedup_impl``. In light mode the run additionally switches
-    the session to STATIC planning (AQE off) for its duration: AQE submits
-    one Spark job per query stage, and in constrained single-node
-    environments a job costs ~0.2-0.7 s of fixed scheduler latency — the
-    pipeline dropped from 79 jobs to 27 (same outputs) with AQE off, which
-    is most of light mode's fixed floor. Runtime re-planning buys nothing
+    the session to STATIC planning (AQE off, one shuffle task per core) for
+    its duration: AQE submits one Spark job per query stage, and in
+    constrained single-node environments a job costs ~0.2-0.7 s of fixed
+    scheduler latency — a checkpoint-light run on a 400-doc corpus is 11
+    jobs with AQE off and 25 with it on (same outputs, local[4]), which is
+    most of light mode's fixed floor. Runtime re-planning buys nothing
     at light-mode scale anyway: every join that must broadcast is already
     count-guarded by the pipeline itself. Default (heavy) mode keeps AQE —
     at web scale its skew-join splitting and runtime re-planning are
@@ -86,16 +87,18 @@ def run_dedup(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
 
 @contextmanager
 def _light_conf_window(spark: SparkSession):
-    """SESSION-CONF WINDOW INVARIANT (re-entrant, per SparkSession): light
-    mode mutates session-level conf (adaptive.enabled off + the three
-    shuffle.partitions resizes inside _run_dedup_impl). Two
-    concurrent light runs on one session would otherwise save each other's
-    transient values as "prev" and restore garbage — the first run in wins
-    the snapshot, the LAST run out restores it (depth-counted). Conf is
-    session-scoped (``spark.newSession()`` has its own), so each session
-    keeps its own depth and snapshot. Mid-run resizes remain benign
-    cross-talk between concurrent runs on one session (performance-only
-    and bounded by the session cap), never a correctness problem; pinned by
+    """SESSION-CONF WINDOW INVARIANT (re-entrant, per SparkSession): the
+    first light run in on a session snapshots its AQE flag and shuffle
+    width, turns AQE off and sets the width to ``core_tasks`` (one task per
+    core); the LAST run out restores the snapshot (depth-counted, so two
+    concurrent light runs never save each other's values as "prev"). The
+    width is fixed for the whole window: static planning does no
+    coalescing, so every shuffle of the run (the prewarm's exact groups,
+    the distinct-content shuffle whose partitions are the signature tasks,
+    the verify pass, dup_pairs) plans at one task per core, and concurrent
+    runs, which set the same two values, cannot see each other's widths.
+    Conf is session-scoped (``spark.newSession()`` has its own), so each
+    session keeps its own depth and snapshot; pinned by
     test_round6.test_concurrent_light_runs_restore_confs."""
     with _LIGHT_CONF_LOCK:
         state = _LIGHT_CONF_STATE.get(spark)
@@ -106,6 +109,8 @@ def _light_conf_window(spark: SparkSession):
                          spark.conf.get("spark.sql.shuffle.partitions")),
             }
             spark.conf.set("spark.sql.adaptive.enabled", "false")
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(core_tasks(spark.sparkContext)))
         state["depth"] += 1
     try:
         yield
@@ -190,14 +195,10 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         prewarm = _warm_pool.submit(inheritable_thread_target(spark)(_warm_exact))
         _warm_pool.shutdown(wait=False)
 
+    # light mode: the distinct-content shuffle runs at the window's
+    # core_tasks width, and mapInPandas keeps its partitioning, so the
+    # signature stage runs one task per core
     n_tasks = core_tasks(spark.sparkContext)
-    if light_stages:
-        # light mode computes signatures straight off the distinct-content
-        # shuffle (static planning: no coalescing), so the signature task
-        # count IS that shuffle's partition count: exactly core_tasks here;
-        # the session value returns as the cap of the sizing below.
-        session_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_tasks))
     reps = store.stage(
         "distinct_reps",
         lambda: exact_dedup.distinct_content_docs(exact_dedup.with_sha256(base)).select(
@@ -231,19 +232,6 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # signature stage concurrently.
     n_sig_rows = store.n_rows("signatures", sig)
 
-    p_small = p_post = None
-    if light_stages:
-        # static planning (AQE off) means no runtime partition coalescing,
-        # so post-signature shuffles — all over NARROW tables 2-4 orders of
-        # magnitude smaller than the corpus — would each run
-        # shuffle.partitions tiny tasks (the CC stage alone ran 1100+ tasks
-        # on a 7k-edge graph). Size them from the OBSERVED signature row
-        # count instead (``n_sig_rows`` above): ~5k signature rows per
-        # partition, floored at core_tasks for parallelism, capped at the
-        # session setting. Restored by the run_dedup wrapper.
-        p_small = max(n_tasks, min(session_sp, n_sig_rows // 5000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(p_small))
-
     # the band table is consumed by bucket stats and verify's bucket
     # membership; left as a plan, each consumer re-reads the wide
     # signature parquet and recomputes 16 band hashes + posexplode.
@@ -276,16 +264,14 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
                 F.count(F.when((F.col("bucket_size") > 1)
                                & (F.col("bucket_size") <= cfg.bucket_cap), 1)),
         },
-        # light mode: cached plan; the observed counts (and thus the manual
-        # broadcast hint below) are skipped — AQE sees the real size of the
-        # tiny eligible side at runtime and picks the broadcast join itself
+        # light mode: cached plan with no write job, so no observed counts;
+        # the broadcast choice below takes a worst-case bound or one count
         light=True, cache=True,
     )
     # broadcast the eligible-bucket side of verify's bucket membership when
     # its observed count fits comfortably in memory (~48B/row); at web scale
     # the count is huge and this stays a shuffle join
     _verify_ups = ["signatures", "bands", "bucket_stats"]
-    n_memb = None
     if light_stages and not store.is_valid("verified_edges", _verify_ups):
         # no write-job Observation in light mode. Small corpora skip the
         # count job too (a job costs ~0.2-0.7 s of fixed latency here):
@@ -297,51 +283,21 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
         # Larger corpora (where the worst case overshoots but the REAL
         # count is usually still broadcastable — non-singleton buckets
         # are a tiny fraction) pay ONE aggregation job for an informed
-        # decision; at that scale the job is amortized anyway. The same
-        # bound (every doc sits in <= bands buckets) or job (the sum of
-        # eligible bucket sizes) gives the bucket-membership row count
-        # that sizes the post-LSH shuffles below. Skipped on resume: a
-        # valid verified_edges never needs the caches at all.
+        # decision; at that scale the job is amortized anyway. Skipped on
+        # resume: a valid verified_edges never needs the caches at all.
         worst = n_sig_rows * cfg.bands if n_sig_rows else None
         if worst is not None and worst * 48 < verify.BROADCAST_BUDGET_BYTES:
-            n_eligible = n_memb = worst
+            n_eligible = worst
         else:
             spark.sparkContext.setJobDescription("hint:n_eligible")
-            _elig = F.col("bucket_size") <= cfg.bucket_cap  # stats already > 1
-            row = stats.select(
-                F.count(F.when(_elig, 1)).alias("n_eligible"),
-                F.sum(F.when(_elig, F.col("bucket_size"))).alias("n_memb"),
-            ).first()
-            n_eligible = int(row["n_eligible"])
-            n_memb = int(row["n_memb"] or 0)
+            n_eligible = stats.filter(F.col("bucket_size") <= cfg.bucket_cap).count()
     else:
         bucket_obs = (store.manifest("bucket_stats") or {}).get("observed", {})
         n_eligible = bucket_obs.get("n_eligible_buckets")
     bcast_eligible = (n_eligible is not None
                       and n_eligible * 48 < verify.BROADCAST_BUDGET_BYTES)
-
-    if light_stages and n_memb is not None:
-        # second static resize, at the LSH boundary: every shuffle from
-        # here on (the member-set reduction and verify pass, dup_pairs,
-        # all CC rounds, cluster assembly) runs over tables bounded by the
-        # bucket MEMBERSHIP row count — typically another ~20x below the
-        # signature count the p_small sizing above used. Event-log
-        # attribution at 1M files showed these stages dispatch-bound, not
-        # compute-bound: ~20 s of wall across the verify/CC/pairs region
-        # went to driver task dispatch of 66-132 near-empty tasks per
-        # stage, identical at every parallelism — i.e. the fixed term that
-        # caps N->4N scaling efficiency. AQE would coalesce these at
-        # runtime; light mode (AQE off) sizes them statically from the
-        # same measurement that priced the broadcast decision, so the
-        # granularity stays DATA-derived (identical across probe legs,
-        # grows back to the session cap as membership grows — a no-op at
-        # web scale).
-        p_post = max(n_tasks, min(p_small, n_memb // 50000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(p_post))
-    # data-derived sizing and broadcast choices (None: not made in this mode)
-    decisions = dict(sig_tasks=n_tasks if light_stages else None, p_small=p_small,
-                     p_post=p_post, bcast_eligible=bcast_eligible, n_memb=n_memb,
-                     n_edges=None, cc_local=None)
+    # data-derived choices (None: not made in this mode)
+    decisions = dict(bcast_eligible=bcast_eligible, n_edges=None, cc_local=None)
 
     dropped = stats.filter(F.col("bucket_size") > cfg.bucket_cap)
     verified = store.stage(
@@ -370,14 +326,6 @@ def _run_dedup_impl(spark: SparkSession, docs: DataFrame, cfg: DedupConfig,
     # the stage's full fixed cost behind CC wall time (store-less, the
     # stage is a lazy plan and the thread only builds it). Span mode keeps
     # the serial order (span_pairs feeds dup_pairs).
-    # ORDERING INVARIANT — no session-conf mutation may follow this point
-    # in the run: the concurrent dup_pairs write below plans against the
-    # session conf at submission time, and every static resize (the
-    # signature stage's core_tasks, p_small and p_post above) happened
-    # strictly earlier. A future edit that moves a spark.conf.set below
-    # this submission races the background write's planning. (The light-
-    # mode restore in run_dedup's finally runs only after _finish_dedup —
-    # and thus this future — completes.)
     dup_fut = None
     if not cfg.span_pass:
         from concurrent.futures import ThreadPoolExecutor

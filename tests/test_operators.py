@@ -1,8 +1,7 @@
 """Spark-level operator tests: serde round trip, span verify, KMV group
-union vs exact, ANN top-k sanity, multimodal plumbing, streaming dedup."""
+union vs exact, ANN top-k sanity, multimodal plumbing."""
 
 import os
-import time
 import warnings
 
 import numpy as np
@@ -152,33 +151,6 @@ def test_ann_lsh_overlaps_exact(spark):
     approx_top = {r["query_id"]: r["vec_id"] for r in approx}
     assert all(exact_top[qid] == qid for qid in exact_top)
     assert all(approx_top.get(qid) == qid for qid in exact_top)
-
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    """File-source stream -> watermarked exact dedup -> memory sink."""
-    import pandas as pd
-
-    from datasketches_spark.streaming.dedup import stream_exact_dedup
-
-    src = str(tmp_path / "stream_src")
-    seed = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", "aaa"), (2, "2024-01-01 00:00:01", "bbb"),
-         (3, "2024-01-01 00:00:02", "aaa"), (4, "2024-01-01 00:00:03", "ccc")],
-        ["doc_id", "ts_s", "content"],
-    ).withColumn("ts", F.to_timestamp("ts_s")).drop("ts_s")
-    seed.coalesce(1).write.parquet(src)
-    schema = "doc_id LONG, content STRING, ts TIMESTAMP"
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = stream_exact_dedup(stream, ts_col="ts")
-    qname = f"dedup_sink_{int(time.time()*1000)}"
-    query = (
-        out.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    query.awaitTermination(120)
-    rows = spark.sql(f"SELECT content FROM {qname}").collect()
-    contents = sorted(r["content"] for r in rows)
-    assert contents == ["aaa", "bbb", "ccc"]
 
 
 def test_salted_join_equals_exact_pairs(spark, sig):

@@ -140,10 +140,12 @@ def test_core_tasks_is_default_parallelism():
 
 
 def test_light_conf_window_is_per_session(spark):
-    """Two sessions' light-mode windows each switch AQE off and each
-    restore their own session's confs, whatever the exit order; a nested
-    window on one session restores only at the outermost exit."""
+    """Two sessions' light-mode windows each switch AQE off and set the
+    shuffle width to one task per core, and each restore their own
+    session's confs, whatever the exit order; a nested window on one
+    session restores only at the outermost exit."""
     from datasketches_spark.pipeline import _LIGHT_CONF_STATE, _light_conf_window
+    from datasketches_spark.session import core_tasks
 
     # fresh sessions: a failure midway leaves no conf change on ``spark``
     s1, s2 = spark.newSession(), spark.newSession()
@@ -154,8 +156,10 @@ def test_light_conf_window_is_per_session(spark):
     w1.__enter__()
     w2.__enter__()
     for s in (s1, s2):
-        assert s.conf.get("spark.sql.adaptive.enabled") == "false"
-        s.conf.set("spark.sql.shuffle.partitions", "3")  # a mid-run resize
+        assert (s.conf.get("spark.sql.adaptive.enabled"),
+                s.conf.get("spark.sql.shuffle.partitions")) == (
+                    "false", str(core_tasks(spark.sparkContext)))
+        s.conf.set("spark.sql.shuffle.partitions", "3")  # a change inside the window
     with _light_conf_window(s1):
         s1.conf.set("spark.sql.shuffle.partitions", "5")
     assert s1.conf.get("spark.sql.adaptive.enabled") == "false"
@@ -167,6 +171,39 @@ def test_light_conf_window_is_per_session(spark):
     assert (s2.conf.get("spark.sql.adaptive.enabled"),
             s2.conf.get("spark.sql.shuffle.partitions")) == prev[s2]
     assert _LIGHT_CONF_STATE == {}
+
+
+def test_light_run_never_plans_at_the_session_width(spark, tmp_path):
+    """Every shuffle of a light run, the prewarm's exact groups included,
+    plans at one task per core: on a session whose own width is W, no
+    completed stage of the run has W tasks, and both confs come back."""
+    sc = spark.sparkContext
+    s = spark.newSession()
+    width = 5 * sc.defaultParallelism + 3
+    s.conf.set("spark.sql.shuffle.partitions", str(width))
+    prev_aqe = s.conf.get("spark.sql.adaptive.enabled")
+    cpath = str(tmp_path / "corpus")
+    generate_corpus(s, 400, seed=11).write.parquet(cpath)
+    corpus = s.read.parquet(cpath)
+    sc.setJobGroup("light_width", "shuffle-width probe")
+    try:
+        res = run_dedup(s, corpus, CFG, checkpoint_dir=str(tmp_path / "ck"),
+                        light_stages=True)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert res.clusters.count() == 400
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(sid)
+              for jid in tracker.getJobIdsForGroup("light_width")
+              for sid in tracker.getJobInfo(jid).stageIds]
+    ran = {st.stageId: st.numTasks for st in stages
+           if st is not None and st.numCompletedTasks > 0}
+    assert ran, "no completed stage found in the run's job group"
+    assert width not in ran.values(), ran
+    assert s.conf.get("spark.sql.shuffle.partitions") == str(width)
+    assert s.conf.get("spark.sql.adaptive.enabled") == prev_aqe
 
 
 def test_run_dedup_restores_caller_job_label(spark):

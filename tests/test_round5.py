@@ -254,7 +254,6 @@ def test_light_mode_job_count_bounded(spark, tmp_path):
     data_dir = json.loads((ck / "manifest.json").read_text())["data_dir"]
     parts = [f for f in os.listdir(ck / data_dir) if f.startswith("part-")]
     assert len(parts) == sc.defaultParallelism
-    assert res.metrics["decisions"]["sig_tasks"] == sc.defaultParallelism
 
 
 # ------------------------------------------------- round-5 session seams
@@ -273,10 +272,10 @@ def test_parse_extra_conf():
 
 
 def test_run_dedup_light_restores_session_conf(spark):
-    """run_dedup(light_stages=True) mutates spark.sql.shuffle.partitions
-    twice mid-run (signature sizing, post-LSH resize) and disables AQE;
-    both must be restored on exit so later queries in the same session
-    plan under the caller's configuration."""
+    """run_dedup(light_stages=True) sets spark.sql.shuffle.partitions to
+    one task per core and disables AQE for the run; both must be restored
+    on exit so later queries in the same session plan under the caller's
+    configuration."""
     from datasketches_spark.config import DedupConfig
     from datasketches_spark.pipeline import run_dedup
     from datasketches_spark.sources.corpus import generate_corpus
@@ -291,4 +290,3 @@ def test_run_dedup_light_restores_session_conf(spark):
     # store-less light mode: the signature stage ran one task per core
     n_cores = spark.sparkContext.defaultParallelism
     assert res.signatures.rdd.getNumPartitions() == n_cores
-    assert res.metrics["decisions"]["sig_tasks"] == n_cores
